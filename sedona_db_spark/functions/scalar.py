@@ -505,15 +505,32 @@ def st_distance(b1: pd.Series, b2: pd.Series) -> pd.Series:
 # predicates
 # ---------------------------------------------------------------------------
 
+# predicate name -> pairwise kernel(left_geom, right_geom).  The refine UDFs
+# below and the spatial join's broadcast tier both read this one table, so
+# a join's pair set cannot depend on which physical plan refined it.
+# ``dwithin`` takes the distance as a third argument.
+PREDICATE_KERNELS = {
+    "intersects": K.geom_intersects,
+    "contains": K.geom_contains,
+    "within": K.geom_within,
+    "covers": K.geom_covers,
+    "coveredby": K.geom_covered_by,
+    "equals": K.geom_equals,
+    "touches": K.geom_touches,
+    "crosses": K.geom_crosses,
+    "overlaps": K.geom_overlaps,
+    "dwithin": K.geom_dwithin,
+}
+
 @pandas_udf(BooleanType())
 def st_intersects(b1: pd.Series, b2: pd.Series) -> pd.Series:
-    return _pairwise_bool(b1, b2, K.geom_intersects,
+    return _pairwise_bool(b1, b2, PREDICATE_KERNELS["intersects"],
                           point_left_fn=lambda px, py, g: K.points_in_geom(px, py, g))
 
 
 @pandas_udf(BooleanType())
 def st_contains(b1: pd.Series, b2: pd.Series) -> pd.Series:
-    return _pairwise_bool(b1, b2, K.geom_contains)
+    return _pairwise_bool(b1, b2, PREDICATE_KERNELS["contains"])
 
 
 @pandas_udf(BooleanType())
@@ -536,17 +553,18 @@ def st_within(b1: pd.Series, b2: pd.Series) -> pd.Series:
             if K._on_boundary_only(g, px[i], py[i]):
                 inside[i] = False
         return inside
-    return _pairwise_bool(b1, b2, K.geom_within, point_left_fn=pt_within)
+    return _pairwise_bool(b1, b2, PREDICATE_KERNELS["within"],
+                          point_left_fn=pt_within)
 
 
 @pandas_udf(BooleanType())
 def st_covers(b1: pd.Series, b2: pd.Series) -> pd.Series:
-    return _pairwise_bool(b1, b2, K.geom_covers)
+    return _pairwise_bool(b1, b2, PREDICATE_KERNELS["covers"])
 
 
 @pandas_udf(BooleanType())
 def st_coveredby(b1: pd.Series, b2: pd.Series) -> pd.Series:
-    return _pairwise_bool(b1, b2, K.geom_covered_by,
+    return _pairwise_bool(b1, b2, PREDICATE_KERNELS["coveredby"],
                           point_left_fn=lambda px, py, g: K.points_in_geom(px, py, g))
 
 
@@ -558,7 +576,7 @@ def st_disjoint(b1: pd.Series, b2: pd.Series) -> pd.Series:
 
 @pandas_udf(BooleanType())
 def st_equals(b1: pd.Series, b2: pd.Series) -> pd.Series:
-    return _pairwise_bool(b1, b2, K.geom_equals)
+    return _pairwise_bool(b1, b2, PREDICATE_KERNELS["equals"])
 
 
 @pandas_udf(BooleanType())
@@ -586,7 +604,7 @@ def st_dwithin(b1: pd.Series, b2: pd.Series, d: pd.Series) -> pd.Series:
     g2 = _decode_series(b2)
     return pd.Series(pd.array(
         [None if a is None or c is None or dd != dd
-         else bool(K.geom_dwithin(a, c, dd))
+         else bool(PREDICATE_KERNELS["dwithin"](a, c, dd))
          for a, c, dd in zip(g1, g2, dist)], dtype="boolean"))
 
 

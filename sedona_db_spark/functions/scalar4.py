@@ -22,22 +22,23 @@ from sedona_db_spark import grid
 from sedona_db_spark.geometry import algos as A
 from sedona_db_spark.geometry import kernels as K
 from sedona_db_spark.geometry import wkb as W
-from sedona_db_spark.functions.scalar import _decode_series, _pairwise_bool
+from sedona_db_spark.functions.scalar import (
+    PREDICATE_KERNELS, _decode_series, _pairwise_bool)
 
 
 @pandas_udf(BooleanType())
 def st_touches(b1: pd.Series, b2: pd.Series) -> pd.Series:
-    return _pairwise_bool(b1, b2, K.geom_touches)
+    return _pairwise_bool(b1, b2, PREDICATE_KERNELS["touches"])
 
 
 @pandas_udf(BooleanType())
 def st_crosses(b1: pd.Series, b2: pd.Series) -> pd.Series:
-    return _pairwise_bool(b1, b2, K.geom_crosses)
+    return _pairwise_bool(b1, b2, PREDICATE_KERNELS["crosses"])
 
 
 @pandas_udf(BooleanType())
 def st_overlaps(b1: pd.Series, b2: pd.Series) -> pd.Series:
-    return _pairwise_bool(b1, b2, K.geom_overlaps)
+    return _pairwise_bool(b1, b2, PREDICATE_KERNELS["overlaps"])
 
 
 @pandas_udf(BooleanType())

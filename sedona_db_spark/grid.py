@@ -63,14 +63,27 @@ def cell_bbox(cell: int) -> tuple[float, float, float, float]:
     return (-180.0 + ix * w, -90.0 + iy * h, -180.0 + (ix + 1) * w, -90.0 + (iy + 1) * h)
 
 
-def covering_cells(xmin: float, ymin: float, xmax: float, ymax: float,
-                   res: int) -> np.ndarray:
-    """All cell ids at ``res`` whose boxes intersect the bbox. Vectorized."""
+def _covering_range(xmin, ymin, xmax, ymax, res):
+    """Inclusive (ix0, ix1, iy0, iy1) index range of the bbox's cells."""
     n = 1 << res
     ix0 = int(np.clip(np.floor((xmin + 180.0) / 360.0 * n), 0, n - 1))
     ix1 = int(np.clip(np.floor((xmax + 180.0) / 360.0 * n), 0, n - 1))
     iy0 = int(np.clip(np.floor((ymin + 90.0) / 180.0 * n), 0, n - 1))
     iy1 = int(np.clip(np.floor((ymax + 90.0) / 180.0 * n), 0, n - 1))
+    return ix0, ix1, iy0, iy1
+
+
+def covering_count(xmin: float, ymin: float, xmax: float, ymax: float,
+                   res: int) -> int:
+    """len(covering_cells(...)) without building the cells."""
+    ix0, ix1, iy0, iy1 = _covering_range(xmin, ymin, xmax, ymax, res)
+    return (ix1 - ix0 + 1) * (iy1 - iy0 + 1)
+
+
+def covering_cells(xmin: float, ymin: float, xmax: float, ymax: float,
+                   res: int) -> np.ndarray:
+    """All cell ids at ``res`` whose boxes intersect the bbox. Vectorized."""
+    ix0, ix1, iy0, iy1 = _covering_range(xmin, ymin, xmax, ymax, res)
     n_cells = (ix1 - ix0 + 1) * (iy1 - iy0 + 1)
     if n_cells > (1 << 22):
         raise ValueError(

@@ -22,9 +22,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
-def spread_small_input(df: DataFrame, *key_cols: str) -> DataFrame:
+def spread_small_input(df: DataFrame, key_col: str,
+                       *more_keys: str) -> DataFrame:
     """Repartition ``df`` to the session's default parallelism when (and
     only when) its plan yields fewer input partitions than that.
+
+    At least one key column is required: the rows are hash-placed on
+    ``key_col`` (and ``more_keys``), never round-robined.
 
     The partition count probe (``df.rdd`` plan translation, driver-only,
     no job) is memoized on the canonicalized plan — repeated calls over
@@ -42,4 +46,4 @@ def spread_small_input(df: DataFrame, *key_cols: str) -> DataFrame:
     n = _sem_cached(_SEM_STATS_CACHE, df, ("nparts",), _nparts)
     if n >= target:
         return df
-    return df.repartition(target, *[F.col(c) for c in key_cols])
+    return df.repartition(target, *[F.col(c) for c in (key_col, *more_keys)])

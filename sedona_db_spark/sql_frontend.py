@@ -941,7 +941,7 @@ def _knn_sql(spark: SparkSession, query: str,
     # the include_ties self-join), and an unpinned
     # monotonically_increasing_id can reassign between evaluations on
     # nondeterministically-ordered upstreams (same mitigation as
-    # spatial_join._broadcast_point_join; round-6 review finding)
+    # spatial_join._broadcast_join)
     qdf2 = qdf.withColumn("__sd_qid", F.monotonically_increasing_id()) \
               .localCheckpoint(eager=True)
     tdf2 = tdf.withColumn("__sd_tid", F.monotonically_increasing_id()) \

@@ -162,7 +162,7 @@ def _winnow_batch(raws: list, k: int, w: int):
         sel_pos.append(p + starts[d])
     if not sel_doc:
         return (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64),
-                H, starts)
+                H, starts, buf)
     dd = np.concatenate(sel_doc)
     ss = np.concatenate(sel_pos)
     o = np.lexsort((ss, dd))

@@ -100,11 +100,15 @@ def test_poly_poly_exploded_dedup(data, spark):
     g2 = FX.random_polygons(60, seed=99, num_vertices=(3, 8))
     g2df = spark.createDataFrame(g2).withColumnRenamed("geometry", "geom")
     G2 = [W.decode(bytes(b)) for b in g2.geometry]
-    rows = spatial_join(g2df, gdf, "intersects").collect()
-    got = [(r["id"], r["id_r"]) for r in rows]
-    assert len(got) == len(set(got)), "duplicate pairs leaked past dedup"
-    assert set(got) == {(i, j) for i, a in enumerate(G2)
-                        for j, b in enumerate(G) if K.geom_intersects(a, b)}
+    exp = {(i, j) for i, a in enumerate(G2)
+           for j, b in enumerate(G) if K.geom_intersects(a, b)}
+    # broadcast tier and the cell path's min-common-cell dedup
+    for bt in (200_000, 0):
+        rows = spatial_join(g2df, gdf, "intersects",
+                            broadcast_threshold=bt).collect()
+        got = [(r["id"], r["id_r"]) for r in rows]
+        assert len(got) == len(set(got)), f"duplicate pairs at {bt}"
+        assert set(got) == exp, f"broadcast_threshold={bt}"
 
 
 def test_dwithin_exploded_left(data, spark):
@@ -117,10 +121,12 @@ def test_dwithin_exploded_left(data, spark):
     d = 1.3
     exp = {(i, j) for i, a in enumerate(G2) for j, b in enumerate(G)
            if K.geom_dwithin(a, b, d)}
-    got_rows = spatial_join(g2df, gdf, "dwithin", distance=d).collect()
-    got = [(r["id"], r["id_r"]) for r in got_rows]
-    assert len(got) == len(set(got)), "duplicate pairs"
-    assert set(got) == exp
+    for bt in (200_000, 0):
+        got_rows = spatial_join(g2df, gdf, "dwithin", distance=d,
+                                broadcast_threshold=bt).collect()
+        got = [(r["id"], r["id_r"]) for r in got_rows]
+        assert len(got) == len(set(got)), f"duplicate pairs at {bt}"
+        assert set(got) == exp, f"broadcast_threshold={bt}"
 
 
 def test_salting_preserves_result(data):
@@ -372,9 +378,10 @@ def test_relation_predicates_vs_brute(spark, pred, fn):
             "overlaps": K.geom_overlaps}[pred]
     exp = {(i, j) for i, a in enumerate(A) for j, b in enumerate(L)
            if kern(a, b)}
-    got = {(r["id"], r["id_r"]) for r in
-           spatial_join(adf, ldf, pred).collect()}
-    assert got == exp
+    for bt in (200_000, 0):
+        got = {(r["id"], r["id_r"]) for r in
+               spatial_join(adf, ldf, pred, broadcast_threshold=bt).collect()}
+        assert got == exp, f"broadcast_threshold={bt}"
 
 
 def test_relate_pattern_join(spark):
@@ -408,8 +415,10 @@ def test_inner_duplicate_rows_not_collapsed(spark):
     D = [W.decode(bytes(b)) for b in dup.geometry]
     d = 0.9
     exp = sum(1 for a in D for b in G if K.geom_dwithin(a, b, d))
-    got = spatial_join(dupdf, gdf, "dwithin", distance=d).count()
-    assert got == exp
+    for bt in (200_000, 0):
+        got = spatial_join(dupdf, gdf, "dwithin", distance=d,
+                           broadcast_threshold=bt).count()
+        assert got == exp, f"broadcast_threshold={bt}"
 
 
 def test_dwithin_sphere_vs_haversine_brute(spark):

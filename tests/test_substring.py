@@ -101,6 +101,11 @@ def test_batch_matches_per_doc():
             pos = _winnow_positions(h, w)
             want = [(int(p), int(h[p])) for p in pos]
             assert got.get(d, []) == want, (trial, d)
+    # an all-short batch (every doc shorter than k) selects nothing and
+    # still returns the full 5-tuple the mapInPandas caller unpacks
+    dd, sel, H, starts, buf = _winnow_batch([b"short", b"tiny"], 16, 32)
+    assert len(dd) == len(sel) == len(H) == 0
+    assert list(starts) == [0, 5, 9] and buf.tobytes() == b"shorttiny"
 
 
 def test_winnowing_guarantee():
