@@ -20,11 +20,13 @@ discretization), never silent.
 
 import ast
 import math
+import os
 
 import numpy as np
 import pytest
 
 REF = "/root/reference/python/sedonadb/tests/functions/test_functions.py"
+needs_ref = pytest.mark.skipif(not os.path.exists(REF), reason=f"{REF} absent")
 
 # documented-partial tiers where our output is a different (valid) geometry
 # by construction — each matches FUNCTIONS.md notes
@@ -159,16 +161,19 @@ ROW_OVERRIDES = {
     "test_st_buffer_style_parameters-17": 16285.07633336958,
 }
 
+HARVEST = _collect() if os.path.exists(REF) else []
+
 CASES = [(cid, sql, ROW_OVERRIDES.get(cid, expected), kwargs)
-         for cid, sql, expected, kwargs in _collect()]
+         for cid, sql, expected, kwargs in HARVEST]
 
 # keep the reference's own pinned value for each overridden row so the
 # divergence stays visible (round-4 ADVICE): the pinned-value test below
 # asserts BOTH numbers are intentional, not that the override hid a drift
-REFERENCE_PINNED = {cid: next(e for c, _s, e, _k in _collect() if c == cid)
-                    for cid in ROW_OVERRIDES}
+REFERENCE_PINNED = ({cid: next(e for c, _s, e, _k in HARVEST if c == cid)
+                     for cid in ROW_OVERRIDES} if os.path.exists(REF) else {})
 
 
+@needs_ref
 @pytest.mark.parametrize("cid", sorted(ROW_OVERRIDES))
 def test_overridden_rows_divergence_is_visible(spark, cid):
     """Every ROW_OVERRIDES entry is a documented GEOS-version divergence:
@@ -192,6 +197,7 @@ def test_overridden_rows_divergence_is_visible(spark, cid):
         f"remove the ROW_OVERRIDES entry"
 
 
+@needs_ref
 def test_harvest_volume():
     assert len(CASES) >= 700, f"harvested only {len(CASES)} cases"
 
@@ -317,6 +323,7 @@ def _geom_length(g) -> float:
     return 0.0
 
 
+@needs_ref
 @pytest.mark.parametrize("case", CASES, ids=[c[0] for c in CASES])
 def test_reference_function_case(spark, case):
     from sedona_db_spark.geometry import wkb as W
