@@ -6,6 +6,7 @@ bench — bench.py stays frozen.  Modes:
   python bench_extra.py explain QUERY...   # dump .explain('formatted')
   python bench_extra.py noop QUERY...      # noop-sink isolation timing
   python bench_extra.py jobs QUERY         # count Spark jobs in the query
+  python bench_extra.py pyfloor            # fixed cost of a Python task
 
 Reads $SPARK_GRAFT_SF_DIR / $SPARK_GRAFT_CPUS like bench.py.
 """
@@ -14,6 +15,7 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -27,10 +29,78 @@ def get_session():
     return spark
 
 
+def pyfloor(spark, reps: int = 9) -> dict:
+    """Fixed cost of a Python task, from outside the benchmark harness:
+
+    - ``submit_to_user_code_s``: median wall time from the driver
+      submitting a 1-row ``mapInPandas`` job to its function starting on
+      the worker (same host, same clock);
+    - ``noop_mapinpandas_s``: median wall time of a ``mapInPandas`` that
+      drops every row, over one row per core, once each worker has run
+      a package UDF;
+    - ``worker_zipimporters``: ``zipimporter`` entries in the worker's
+      ``sys.path_importer_cache``, each of which Python < 3.12 re-reads
+      whenever the worker calls ``importlib.invalidate_caches()``.
+
+    The probe touches the package, as every engine UDF does on unpickle,
+    so the worker runs with the package imported."""
+    import pandas as pd
+    from pyspark.sql.types import (DoubleType, LongType, StringType,
+                                   StructField, StructType)
+    from sedona_db_spark.geometry import wkb as W
+
+    def probe(batches):
+        import zipimport
+        t_user = time.time()
+        W.wkt_to_wkb("POINT (0 0)")
+        for _ in batches:
+            pass
+        zips = sum(isinstance(v, zipimport.zipimporter)
+                   for v in sys.path_importer_cache.values())
+        yield pd.DataFrame({
+            "t_user": [t_user], "zips": [zips],
+            "impl": [zipimport.zipimporter.invalidate_caches.__module__]})
+
+    schema = StructType([StructField("t_user", DoubleType()),
+                         StructField("zips", LongType()),
+                         StructField("impl", StringType())])
+    one = spark.range(0, 1, numPartitions=1)
+    one.mapInPandas(probe, schema).collect()   # start a worker
+    lags = []
+    for _ in range(reps):
+        t0 = time.time()
+        row = one.mapInPandas(probe, schema).collect()[0]
+        lags.append(row["t_user"] - t0)
+
+    def empty(batches):
+        for b in batches:
+            yield b.iloc[:0]
+    cores = spark.sparkContext.defaultParallelism
+    rows = spark.range(0, cores, numPartitions=cores)
+    # every worker has run a package UDF, as in a session after a join
+    rows.mapInPandas(probe, schema).collect()
+    noop = []
+    for _ in range(reps):
+        t0 = time.perf_counter()
+        rows.mapInPandas(empty, rows.schema).collect()
+        noop.append(time.perf_counter() - t0)
+    return {"python": sys.version.split()[0],
+            "submit_to_user_code_s": round(statistics.median(lags), 4),
+            "noop_mapinpandas_s": round(statistics.median(noop), 4),
+            "worker_zipimporters": int(row["zips"]),
+            "worker_invalidate_caches": row["impl"]}
+
+
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     mode = sys.argv[1] if len(sys.argv) > 1 else "phases"
     names = sys.argv[2:]
+
+    if mode == "pyfloor":
+        spark = get_session()
+        print(json.dumps(pyfloor(spark)))
+        spark.stop()
+        return
 
     from sedona_db_spark.plans.demo_queries import QUERIES
     from bench import HEADLINE

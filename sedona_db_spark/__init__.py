@@ -24,8 +24,10 @@ A from-scratch re-expression of the capabilities of Apache SedonaDB
 __version__ = "0.1.0"
 
 from sedona_db_spark._malloc import tune_malloc
+from sedona_db_spark._zipcache import install as _install_zipcache
 
 tune_malloc()   # per-process; Spark Python workers import this package too
+_install_zipcache()
 
 from sedona_db_spark.session import get_spark, register_all  # noqa: F401
 from sedona_db_spark.sql_frontend import sql  # noqa: F401

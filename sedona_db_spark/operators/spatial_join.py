@@ -35,6 +35,9 @@ for k-way parallelism inside hot cells (dense metro tiles).
 
 from __future__ import annotations
 
+import os
+from urllib.parse import unquote, urlparse
+
 import numpy as np
 import pandas as pd
 
@@ -303,11 +306,13 @@ def _cell_udf(res: int):
 
 
 # planning-statistics memos keyed on the CANONICALIZED plan
-# (semanticHash + sameSemantics verification): a query function invoked
-# repeatedly in one session rebuilds identical DataFrame plans, and the
-# counts / point-kind flags derived from them are plan properties, not
-# data results — the same class of memo as Spark's own CacheManager /
-# catalog statistics.  Nothing here ever caches query RESULTS: every join
+# (semanticHash + sameSemantics verification) plus the input files' paths,
+# sizes and mtimes (a file appended to a path re-read in the same session
+# changes the data, not the plan): a query function invoked repeatedly in
+# one session rebuilds identical DataFrame plans, and the counts /
+# point-kind flags derived from them are statistics, not data results —
+# the same class of memo as Spark's own CacheManager / catalog
+# statistics.  Nothing here ever caches query RESULTS: every join
 # still scans, collects and refines from the inputs on each run.
 _SEM_STATS_CACHE: dict = {}
 _SEM_POINT_CACHE: dict = {}
@@ -328,11 +333,30 @@ class _BuildSideTooBig(Exception):
     skipped for a low row count)."""
 
 
+def _input_fingerprint(df: DataFrame) -> tuple:
+    """Sorted input file paths, with (size, mtime_ns) for local ``file:``
+    paths.  Spark's file-index equality compares only root paths, so a
+    re-read of an appended directory is sameSemantics with the old frame;
+    this tells the two apart.  Lists on the driver, starts no job."""
+    out = []
+    for p in sorted(df.inputFiles()):
+        if p.startswith("file:"):
+            try:
+                st = os.stat(unquote(urlparse(p).path))
+                out.append((p, st.st_size, st.st_mtime_ns))
+                continue
+            except OSError:
+                pass
+        out.append((p,))
+    return tuple(out)
+
+
 def _sem_cached(cache: dict, df: DataFrame, tag, compute):
-    """Memo helper: key on (semanticHash, tag), verify with sameSemantics
-    (hash collisions can alias distinct plans), else compute and store."""
+    """Memo helper: key on (semanticHash, input files, tag), verify with
+    sameSemantics (hash collisions can alias distinct plans), else compute
+    and store."""
     try:
-        key = (df.semanticHash(), tag)
+        key = (df.semanticHash(), _input_fingerprint(df), tag)
     except Exception:
         return compute()
     hit = cache.get(key)

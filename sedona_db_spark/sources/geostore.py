@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from sedona_db_spark import grid
+from sedona_db_spark.geometry import wkb as W
 
 BBOX_COLS = ("bbox_xmin", "bbox_ymin", "bbox_xmax", "bbox_ymax")
 
@@ -113,12 +114,19 @@ def spatial_read(spark: SparkSession, path: str, bbox: tuple,
     """
     df = read_geo(spark, path).where(bbox_filter(*bbox))
     if exact:
-        from sedona_db_spark.functions.scalar import st_intersects, st_geomfromtext
-        xmin, ymin, xmax, ymax = bbox
-        wkt = (f"POLYGON (({xmin} {ymin}, {xmax} {ymin}, {xmax} {ymax}, "
-               f"{xmin} {ymax}, {xmin} {ymin}))")
-        df = df.where(st_intersects(F.col(geom_col), st_geomfromtext(F.lit(wkt))))
+        df = df.where(window_filter(geom_col, bbox))
     return df
+
+
+def window_filter(geom_col: str, bbox: tuple) -> Column:
+    """Exact intersects with the window polygon ``bbox``.  The window's WKB
+    is built once on the driver and enters the plan as a literal, so the
+    refine is the plan's only Python UDF."""
+    from sedona_db_spark.functions.scalar import st_intersects
+    xmin, ymin, xmax, ymax = bbox
+    wkt = (f"POLYGON (({xmin} {ymin}, {xmax} {ymin}, {xmax} {ymax}, "
+           f"{xmin} {ymax}, {xmin} {ymin}))")
+    return st_intersects(F.col(geom_col), F.lit(W.wkt_to_wkb(wkt)))
 
 
 def pruning_stats(path: str, bbox: tuple,

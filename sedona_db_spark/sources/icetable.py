@@ -265,17 +265,11 @@ def read(spark: SparkSession, path: str, snapshot_id: int | None = None,
         return spark.createDataFrame([], schema)
     df = spark.read.parquet(*scan["files"])
     if bbox is not None:
-        from sedona_db_spark.sources.geostore import bbox_filter
+        from sedona_db_spark.sources.geostore import bbox_filter, window_filter
         df = df.where(bbox_filter(*bbox))
         gcol = meta.get("geometry-column")
         if exact and gcol and gcol in df.columns:
-            from sedona_db_spark.functions.scalar import (st_geomfromtext,
-                                                          st_intersects)
-            xmin, ymin, xmax, ymax = bbox
-            wkt = (f"POLYGON (({xmin} {ymin}, {xmax} {ymin}, {xmax} {ymax}, "
-                   f"{xmin} {ymax}, {xmin} {ymin}))")
-            df = df.where(st_intersects(F.col(gcol),
-                                        st_geomfromtext(F.lit(wkt))))
+            df = df.where(window_filter(gcol, bbox))
     return df
 
 

@@ -97,6 +97,26 @@ def test_manifest_file_pruning_and_bbox_read(spark, tmp_path):
     assert got == brute > 0
 
 
+def test_bbox_read_drops_parcel_outside_window(spark, tmp_path):
+    """A parcel whose bbox overlaps the window but whose geometry does not
+    passes the covering-column filter and is dropped by the exact refine;
+    the refine is the plan's only Python evaluation."""
+    import pandas as pd
+    from sedona_db_spark.geometry import wkb as W
+    path = str(tmp_path / "t5w")
+    tri = W.wkt_to_wkb("POLYGON ((0 0, 10 0, 0 10, 0 0))")
+    sq = W.wkt_to_wkb("POLYGON ((7 7, 8.5 7, 8.5 8.5, 7 8.5, 7 7))")
+    I.create(spark, path, spark.createDataFrame(pd.DataFrame(
+        {"id": [1, 2], "geom": [tri, sq]})))
+    window = (8.0, 8.0, 9.0, 9.0)
+    assert sorted(r.id for r in I.read(spark, path, bbox=window,
+                                       exact=False).collect()) == [1, 2]
+    df = I.read(spark, path, bbox=window)
+    assert [r.id for r in df.collect()] == [2]
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan
+
+
 def test_expire_snapshots_reclaims_only_dead_files(spark, tmp_path):
     path = str(tmp_path / "t6")
     I.create(spark, path, _pts(spark, 20, seed=11))
