@@ -7,6 +7,8 @@ bench — bench.py stays frozen.  Modes:
   python bench_extra.py noop QUERY...      # noop-sink isolation timing
   python bench_extra.py jobs QUERY         # count Spark jobs in the query
   python bench_extra.py pyfloor            # fixed cost of a Python task
+  python bench_extra.py rejoin [N]         # N joins of fresh ice-table
+                                           # probes against one layer
 
 Reads $SPARK_GRAFT_SF_DIR / $SPARK_GRAFT_CPUS like bench.py.
 """
@@ -91,6 +93,53 @@ def pyfloor(spark, reps: int = 9) -> dict:
             "worker_invalidate_caches": row["impl"]}
 
 
+def rejoin(spark, n: int = 6):
+    """Driver construct cost of a repeated broadcast join, per join.
+
+    Each of ``n`` joins commits 250 fresh polygon parcels to a new ice
+    table, reads it back through a bbox window (new files, so every
+    probe-side memo misses) and joins it ``intersects`` with one fixed
+    600-polygon layer.  Prints one JSON line per join: the Spark jobs
+    started while the DataFrame was built, ``construct_s``,
+    ``execute_s`` and the pair count."""
+    import tempfile
+    from sedona_db_spark.operators import spatial_join
+    from sedona_db_spark.sources import icetable
+    from sedona_db_spark.sources.fixtures import random_polygons
+    zones = random_polygons(600, seed=7999, size=(0.4, 1.5), hole_rate=0.2,
+                            bounds=(0.0, 0.0, 40.0, 20.0))
+    layer = spark.createDataFrame(
+        zones.rename(columns={"geometry": "geom", "id": "zone_id"})
+        [["zone_id", "geom"]])
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    with tempfile.TemporaryDirectory(prefix="rejoin-") as tmp:
+        for k in range(n):
+            parcels = random_polygons(250, seed=k, size=(0.1, 0.35),
+                                      bounds=(0.5, 0.5, 19.5, 19.5))
+            path = os.path.join(tmp, f"ice-{k}")
+            icetable.create(spark, path, spark.createDataFrame(
+                parcels.rename(columns={"geometry": "geom",
+                                        "id": "parcel_id"})
+                [["parcel_id", "geom"]]), geom_col="geom")
+            probe = icetable.read(spark, path, bbox=(0.0, 0.0, 20.0, 20.0))
+            group = f"rejoin-{k}-construct"
+            sc.setJobGroup(group, group)
+            t0 = time.perf_counter()
+            df = spatial_join(probe, layer, "intersects").select(
+                "parcel_id", "zone_id")
+            t1 = time.perf_counter()
+            sc.setJobGroup(f"rejoin-{k}-execute", "execute")
+            pairs = len(df.collect())
+            t2 = time.perf_counter()
+            print(json.dumps({
+                "join": k,
+                "construct_jobs": len(tracker.getJobIdsForGroup(group) or []),
+                "construct_s": round(t1 - t0, 3),
+                "execute_s": round(t2 - t1, 3),
+                "pairs": pairs}), flush=True)
+
+
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     mode = sys.argv[1] if len(sys.argv) > 1 else "phases"
@@ -99,6 +148,11 @@ def main():
     if mode == "pyfloor":
         spark = get_session()
         print(json.dumps(pyfloor(spark)))
+        spark.stop()
+        return
+    if mode == "rejoin":
+        spark = get_session()
+        rejoin(spark, int(names[0]) if names else 6)
         spark.stop()
         return
 
