@@ -57,9 +57,9 @@ def _sf_of(sf_dir: str) -> float:
 
 
 HEADLINE = [
-    # spatial engine — all four join strategies tracked round-over-round:
-    # interval (pip_pairs), JVM HOF (pip_hex_pairs), broadcast dwithin
-    # (dwithin_pairs), spherical cap/bulge (dwithin_sphere_pairs)
+    # spatial engine — every join strategy tracked round-over-round: JVM
+    # interval rows (pip_pairs), JVM HOF rows (pip_hex_pairs), broadcast
+    # dwithin (dwithin_pairs), spherical cap/bulge (dwithin_sphere_pairs)
     "pip_pairs", "pip_hex_pairs", "pip_count_by_nation", "knn_pairs",
     "dwithin_pairs", "dwithin_sphere_pairs",
     "tile_assignments", "geocode_cells",
@@ -201,9 +201,9 @@ def scaling_job(spark, n_pages: int):
     lon, lat = geocode_cols(F.col("url"))
     pages = (synth_pages(spark, n_pages)
              .select("url").withColumn("lon", lon).withColumn("lat", lat))
-    # axis-aligned region grid → the all-JVM interval-join path (the raster
-    # tile-lookup shape); the python-kernel path is benchmarked separately
-    # in the headline suite (pages_pip_join, 12-gon metro polygons included)
+    # axis-aligned region grid → the all-JVM tier's interval rows only
+    # (the raster tile-lookup shape); scaling_job_poly adds the 12-gon
+    # metro polygons of pages_pip_join
     regions = spark.createDataFrame(regions_grid(
         n_side=16, bounds=(-180.0, -85.0, 180.0, 85.0), metro_hotspots=0))
     return spatial_join(pages, regions, "coveredby",
@@ -211,10 +211,11 @@ def scaling_job(spark, n_pages: int):
 
 
 def scaling_job_poly(spark, n_pages: int):
-    """Scaling-evidence variant over the GENERAL-polygon JVM HOF path (the
-    non-rectangular layer shape of pages_pip_join): same geocoded pages,
-    region grid WITH metro 12-gons → `_poly_jvm_join` crossing-number
-    refine, still zero Python operators in the plan."""
+    """Scaling-evidence variant over the mixed rect + polygon layer (the
+    layer shape of pages_pip_join): same geocoded pages, region grid WITH
+    metro 12-gons → the all-JVM tier's conditional refine (interval rows
+    for the grid, the crossing-number HOF for the 12-gons), still zero
+    Python operators in the plan."""
     from pyspark.sql import functions as F
     from sedona_db_spark.webtext import synth_pages, geocode_cols
     from sedona_db_spark.sources.fixtures import regions_grid
@@ -276,7 +277,7 @@ def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if "--scaling-poly" in sys.argv:
-        # same 2→8 protocol over the general-polygon JVM HOF join path
+        # same 2→8 protocol over the mixed rect + polygon layer
         out = run_scaling(int(os.environ.get("SPARK_GRAFT_SCALE_LOW", "2")),
                           int(os.environ.get("SPARK_GRAFT_SCALE_HIGH", "8")),
                           job_fn=scaling_job_poly,

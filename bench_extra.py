@@ -8,7 +8,9 @@ bench — bench.py stays frozen.  Modes:
   python bench_extra.py jobs QUERY         # count Spark jobs in the query
   python bench_extra.py pyfloor            # fixed cost of a Python task
   python bench_extra.py rejoin [N]         # N joins of fresh ice-table
-                                           # probes against one layer
+                                           # probes against one layer, and
+                                           # N lon/lat joins against the
+                                           # 264-region mixed layer
 
 Reads $SPARK_GRAFT_SF_DIR / $SPARK_GRAFT_CPUS like bench.py.
 """
@@ -99,18 +101,28 @@ def rejoin(spark, n: int = 6):
     Each of ``n`` joins commits 250 fresh polygon parcels to a new ice
     table, reads it back through a bbox window (new files, so every
     probe-side memo misses) and joins it ``intersects`` with one fixed
-    600-polygon layer.  Prints one JSON line per join: the Spark jobs
-    started while the DataFrame was built, ``construct_s``,
-    ``execute_s`` and the pair count."""
+    600-polygon layer.  Each also builds a lon/lat ``coveredby`` join of
+    one fixed point frame with the 264-region mixed rect + 12-gon layer
+    (``pages_pip``'s shape, the all-JVM tier).  Prints one JSON line per
+    join: the Spark jobs started while the DataFrame was built,
+    ``construct_s``, ``execute_s`` and the pair count, then the lon/lat
+    join's ``pip_construct_jobs`` and ``pip_construct_s``."""
     import tempfile
+    import numpy as np
+    import pandas as pd
     from sedona_db_spark.operators import spatial_join
     from sedona_db_spark.sources import icetable
-    from sedona_db_spark.sources.fixtures import random_polygons
+    from sedona_db_spark.sources.fixtures import random_polygons, regions_grid
     zones = random_polygons(600, seed=7999, size=(0.4, 1.5), hole_rate=0.2,
                             bounds=(0.0, 0.0, 40.0, 20.0))
     layer = spark.createDataFrame(
         zones.rename(columns={"geometry": "geom", "id": "zone_id"})
         [["zone_id", "geom"]])
+    regions = spark.createDataFrame(regions_grid(
+        n_side=16, bounds=(-180.0, -85.0, 180.0, 85.0), metro_hotspots=8))
+    rng = np.random.default_rng(7)
+    points = spark.createDataFrame(pd.DataFrame(
+        {"lon": rng.uniform(-180, 180, 1000), "lat": rng.uniform(-85, 85, 1000)}))
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     with tempfile.TemporaryDirectory(prefix="rejoin-") as tmp:
@@ -132,12 +144,21 @@ def rejoin(spark, n: int = 6):
             sc.setJobGroup(f"rejoin-{k}-execute", "execute")
             pairs = len(df.collect())
             t2 = time.perf_counter()
+            pip_group = f"rejoin-{k}-pip-construct"
+            sc.setJobGroup(pip_group, pip_group)
+            t3 = time.perf_counter()
+            spatial_join(points, regions, "coveredby",
+                         left_lonlat=("lon", "lat"), right_geom="geom")
+            t4 = time.perf_counter()
             print(json.dumps({
                 "join": k,
                 "construct_jobs": len(tracker.getJobIdsForGroup(group) or []),
                 "construct_s": round(t1 - t0, 3),
                 "execute_s": round(t2 - t1, 3),
-                "pairs": pairs}), flush=True)
+                "pairs": pairs,
+                "pip_construct_jobs": len(
+                    tracker.getJobIdsForGroup(pip_group) or []),
+                "pip_construct_s": round(t4 - t3, 3)}), flush=True)
 
 
 def main():

@@ -35,6 +35,7 @@ for k-way parallelism inside hot cells (dense metro tiles).
 
 from __future__ import annotations
 
+import functools
 import os
 from collections import OrderedDict
 from urllib.parse import unquote, urlparse
@@ -44,7 +45,8 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, LongType
+from pyspark.sql.types import (ArrayType, DoubleType, LongType, StructField,
+                               StructType)
 
 from sedona_db_spark import grid
 from sedona_db_spark.functions.scalar import PREDICATE_KERNELS
@@ -747,7 +749,7 @@ def _spatial_join_impl(
     # session, not per join.  Asked only when a tier needs it: the fused
     # broadcast tier splits every batch into point and non-point rows
     # itself, so for the predicates both its sets admit, it is asked only
-    # if the rect JVM tier may apply or the cell join is taken.
+    # if the all-JVM tier may apply or the cell join is taken.
     def _probe_kind():
         r = left.agg(F.min(F.length(F.col(left_geom))).alias("lo"),
                      F.max(F.length(F.col(left_geom))).alias("hi")
@@ -1190,9 +1192,9 @@ class _BuildSide:
     """A broadcast build side, collected and decoded once: the
     checkpointed frame with ``__ridx``, the rows' ids, WKBs, geometries
     and per-row pads, their WKB byte total, the checkpoint's stored bytes,
-    mean bbox extent, and the cell index broadcasts built from them so
-    far.  Raises _BuildSideTooBig before decoding a side over the byte
-    budget."""
+    mean bbox extent, each row's shape for the all-JVM tier, and the cell
+    index broadcasts and JVM cell tables built from them so far.  Raises
+    _BuildSideTooBig before decoding a side over the byte budget."""
 
     MAX_INDEXES = 4
 
@@ -1223,7 +1225,6 @@ class _BuildSide:
         if self.nbytes > _BROADCAST_GEOM_BYTES:
             raise _BuildSideTooBig
         self.geoms = [None if b is None else W.decode(b) for b in self.wkbs]
-        self.r_geoms = dict(zip(self.ids.tolist(), self.geoms))
         self.pads = None
         if dist_col is not None:
             # a NULL build distance never matches (the cell path's refine
@@ -1239,7 +1240,8 @@ class _BuildSide:
         self.w, self.h = ((float(np.mean(ext[:, 2] - ext[:, 0])),
                            float(np.mean(ext[:, 3] - ext[:, 1])))
                           if len(ext) else (0.0, 0.0))
-        self.indexes: OrderedDict = OrderedDict()
+        # cell indexes with their broadcasts, and JVM cell tables
+        self.derived: OrderedDict = OrderedDict()
         self.lock = threading.Lock()
 
     def stored_bytes(self) -> int | None:
@@ -1268,22 +1270,78 @@ class _BuildSide:
     def blocks_present(self) -> bool:
         return self.stored_bytes() is not None
 
+    def weight(self) -> int:
+        """Bytes this side holds: its WKB on the driver, its checkpoint on
+        the executors and its cached JVM cell tables."""
+        with self.lock:
+            return (self.nbytes + self.stored
+                    + sum(b for _, b in self.derived.values()))
+
+    def _derived(self, key, make):
+        """The structure under ``key`` in this side's small LRU, made on
+        first use by ``make() -> (value, bytes)``."""
+        with self.lock:
+            hit = self.derived.get(key)
+            if hit is None:
+                hit = self.derived[key] = make()
+                if len(self.derived) > self.MAX_INDEXES:
+                    self.derived.popitem(last=False)
+            self.derived.move_to_end(key)
+            return hit[0]
+
     def index_broadcast(self, sc, res: int, pad: float, predicate: str,
                         distance):
         """The broadcast cell index at ``res``, built on first use (an
         explicit ``res`` and one derived from ``pad`` share it)."""
         sphere = predicate in ("dwithin_sphere", "intersects_sphere")
         d_cov = float(distance) if predicate == "dwithin_sphere" else 0.0
-        key = (res, pad, sphere, d_cov)
-        with self.lock:
-            bc = self.indexes.get(key)
-            if bc is None:
-                bc = sc.broadcast(self._cell_index(res, pad, sphere, d_cov))
-                self.indexes[key] = bc
-                if len(self.indexes) > self.MAX_INDEXES:
-                    self.indexes.popitem(last=False)
-            self.indexes.move_to_end(key)
-            return bc
+        return self._derived(
+            ("index", res, pad, sphere, d_cov),
+            lambda: (sc.broadcast(self._cell_index(res, pad, sphere, d_cov)),
+                     0))
+
+    @functools.cached_property
+    def shapes(self) -> list:
+        """Each row's shape for the all-JVM tier, classified once: None
+        for a NULL geometry, "rect" for an axis-aligned rectangle, its
+        type for a point, line or polygon of at most MAX_JVM_POLY_EDGES
+        edges, else "other"."""
+        return [None if g is None else "rect" if _is_axis_rect(g)
+                else g[0] if (g[0] in _JVM_TYPES
+                              and _edge_count(g) <= MAX_JVM_POLY_EDGES)
+                else "other" for g in self.geoms]
+
+    def cell_table(self, res: int, pad: float) -> DataFrame:
+        """The all-JVM tier's broadcast cell table at ``res``, built on
+        first use: one row per (covering cell, build row) with the row's
+        bbox ``__x0..__y1`` and, unless the row is a box, its edge arrays
+        ``__parts``.  Rects and points are boxes: a point is the
+        degenerate box [x,x]×[y,y], whose clamp distance IS the point
+        distance and whose closed box IS coordinate equality (the tier
+        takes points only where that holds: lon/lat probes, not
+        ``within``).  Built from pandas, so it plans as a LocalRelation."""
+        return self._derived(("cells", res, pad),
+                             lambda: self._cell_table(res, pad))
+
+    def _cell_table(self, res: int, pad: float) -> tuple:
+        rows, nbytes = [], 0
+        for pos, shape in enumerate(self.shapes):
+            x0, y0, x1, y1 = self.bbox[pos]
+            if np.isnan(x0):            # NULL or empty geometry
+                continue
+            box = shape in ("rect", "Point")
+            parts = None if box else _geom_edge_parts(self.geoms[pos])
+            cells = grid.covering_cells(x0 - pad, y0 - pad, x1 + pad,
+                                        y1 + pad, res)
+            # each edge sits twice per cell row (in its ring's array and
+            # in ``edges``), 4 doubles each
+            nbytes += len(cells) * (48 + (0 if box else 64 * _edge_count(
+                self.geoms[pos])))
+            rid = int(self.ids[pos])
+            rows.extend((int(c), rid, x0, y0, x1, y1, parts) for c in cells)
+        pdf = pd.DataFrame(rows, columns=[f.name for f in _CELL_TABLE.fields])
+        spark = self.right_i.sparkSession
+        return spark.createDataFrame(pdf, _CELL_TABLE), nbytes
 
     def _cell_index(self, res, pad, sphere, d_cov) -> tuple:
         pads = self.pads
@@ -1328,10 +1386,9 @@ class _BuildSide:
                 level_rows)
 
 
-# weighed by the WKB held on the driver plus the checkpoint held by
-# the executors
-_BUILD_SIDES = _Memo("build_side",
-                     weigh=lambda hit: hit[1].nbytes + hit[1].stored)
+# weighed by the WKB held on the driver, the checkpoint held by the
+# executors and the cached JVM cell tables
+_BUILD_SIDES = _Memo("build_side", weigh=lambda hit: hit[1].weight())
 
 
 def _broadcast_join(left: DataFrame, right: DataFrame, predicate: str,
@@ -1353,9 +1410,9 @@ def _broadcast_join(left: DataFrame, right: DataFrame, predicate: str,
     build plans (``_BUILD_SIDES``).
 
     Any WKB probe is accepted.  ``probe_exploded()`` says whether some
-    probe row is not a 2-D point; it is asked only if the rect JVM tier
-    may apply, else only a memoized answer is used.  Point rows keep the
-    vectorized cell-id lookup.
+    probe row is not a 2-D point; it is asked only if the all-JVM tier
+    may apply to a WKB probe, else only a memoized answer is used.  Point
+    rows keep the vectorized cell-id lookup.
     Every other row is decoded once, looks its bbox covering up in the
     same cell index, passes an exact padded-bbox test and is refined with
     the predicate's ``PREDICATE_KERNELS`` entry — the kernel the cell
@@ -1367,8 +1424,7 @@ def _broadcast_join(left: DataFrame, right: DataFrame, predicate: str,
     from the exact bboxes of the geometries this path collects anyway —
     replacing the sampled python-UDF stats aggregate (one fewer Spark job
     per join, and exact instead of sampled statistics)."""
-    from pyspark.sql.types import (BooleanType, LongType, StructField,
-                                   StructType)
+    from pyspark.sql.types import BooleanType
 
     side = _sem_cached(_BUILD_SIDES, right,
                        ("build", rgeom, dist_col, tuple(right.columns)),
@@ -1377,101 +1433,35 @@ def _broadcast_join(left: DataFrame, right: DataFrame, predicate: str,
     # the byte guard holds on a memo hit too (the budget may have shrunk)
     if side.nbytes > _BROADCAST_GEOM_BYTES:
         raise _BuildSideTooBig
-    right_i, geoms, r_geoms = side.right_i, side.geoms, side.r_geoms
+    right_i = side.right_i
     if res is None:
         # same heuristic as pick_join_res over _bbox_stats, but exact:
         # mean bbox extent over every collected geometry
         res = pick_join_res({"w": side.w + 2 * pad, "h": side.h + 2 * pad})
 
-    # rectangle fast path: an axis-aligned dimension layer (tile grids, bbox
-    # coverings — the raster-lookup shape) refines with pure JVM interval
-    # arithmetic: the whole join is codegen, zero Python anywhere.
-    # POINT build geometries are degenerate boxes ([x,x]×[y,y]: the clamp
-    # distance IS the point distance, the closed-box test IS coordinate
-    # equality), so point layers with a lon/lat probe take this path too —
-    # flat (cell, ridx, bounds) rows instead of the per-edge HOF struct
-    # table whose nested createDataFrame dominated dwithin construction.
-    # "within" needs areal interiors — points stay off (open box ≠ the
-    # point-within-point DE-9IM case); WKB probes keep the fused
-    # mapInPandas tier (the measured-faster python-broadcast path).
-    # The interval refine is point-vs-box math: point probes only.
-    def _rect_like(g):
-        if _is_axis_rect(g):
-            return True
-        return (g[0] == "Point" and left_lonlat is not None
-                and predicate != "within")
+    # the all-JVM tier: a cell-key broadcast hash join and a refine in
+    # codegen, zero Python anywhere.  It takes lon/lat probes (the
+    # coordinates are already JVM-visible) against layers of rects,
+    # points, lines and polygons of at most MAX_JVM_POLY_EDGES edges
+    # (beyond that the numpy batch refine amortizes better; `within`
+    # needs areal interiors, so polygons only).  A WKB probe takes it only
+    # against an all-rect layer, and only if every probe row is a point:
+    # otherwise the fused mapInPandas pass below, measured faster than an
+    # ArrowEvalPython coordinate extract feeding the edge refine.
+    shapes = set(side.shapes) - {None}
+    if left_lonlat is None:
+        jvm_ok = {"rect"}
+    elif predicate == "within":
+        jvm_ok = {"rect", "Polygon", "MultiPolygon"}
+    else:
+        jvm_ok = {"rect", *_JVM_TYPES}
     if (dist_col is None
-            and not predicate.endswith("_sphere")  # rect path is planar math
-            and all(g is None or _rect_like(g) for g in geoms)
-            and any(geoms)
-            and not probe_exploded()):
-        return _rect_jvm_join(left, right_i, r_geoms, predicate,
-                              distance, left_geom, res, pad, left_lonlat,
-                              rcols=right.columns, ldist_col=ldist_col,
-                              how=how)
-
-    # MIXED rect + polygon layers (the web-geocode shape: an admin grid
-    # plus a few irregular metro polygons): route each inner-join pair
-    # through the cheapest exact refine for ITS build geometry — interval
-    # codegen for the axis rects, the per-edge HOF only for the true
-    # polygons — instead of paying the O(edges) HOF lambda for every
-    # candidate against every rectangle.  The build rows partition by
-    # __ridx, so the two joins' pair sets are disjoint and their union is
-    # exactly the single-path result (inner only: semi/anti/mark/left
-    # would need cross-branch row reconciliation).
-    if (how == "inner"
-            and left_lonlat is not None
-            and dist_col is None
-            and not predicate.endswith("_sphere")
-            and predicate in ("intersects", "coveredby", "within")):
-        rects = {i: g for i, g in r_geoms.items()
-                 if g is not None and _rect_like(g)}
-        polys = {i: g for i, g in r_geoms.items()
-                 if g is not None and not _rect_like(g)}
-        _poly_types = (("Polygon", "MultiPolygon") if predicate == "within"
-                       else ("Point", "MultiPoint", "LineString",
-                             "MultiLineString", "Polygon", "MultiPolygon"))
-        if (rects and polys
-                and all(g[0] in _poly_types for g in polys.values())
-                and max((_edge_count(g) for g in polys.values()), default=0)
-                <= MAX_JVM_POLY_EDGES):
-            return _mixed_jvm_join(left, right_i, rects, polys, predicate,
-                                   left_geom, res, pad, left_lonlat,
-                                   rcols=right.columns)
-
-    # general-geometry JVM fast path: the even-odd crossing-number /
-    # on-edge / point-to-segment refine is a pure SQL higher-order-function
-    # expression over per-geometry edge arrays — zero Python anywhere,
-    # mirroring the numpy kernel's exact arithmetic (points_in_ring,
-    # points_seg_dist) so results are bit-identical.  Gated on:
-    # - lon/lat probe columns: the coordinates are already JVM-visible, so
-    #   the whole plan is Python-free.  WKB probes stay on the fused
-    #   mapInPandas path — measured A/B: one vectorized decode+refine pass
-    #   that emits matches only beats an ArrowEvalPython coordinate
-    #   extract (all rows cross the Python boundary) plus the HOF refine;
-    # - edge count: HOF lambdas are O(edges) per candidate pair without
-    #   the numpy batch amortization, so many-vertex layers (coastlines)
-    #   keep the vectorized mapInPandas path.
-    # `within` needs areal semantics → polygonal only.
-    _jvm_ok_types = (("Polygon", "MultiPolygon") if predicate == "within"
-                     else ("Point", "MultiPoint", "LineString",
-                           "MultiLineString", "Polygon", "MultiPolygon"))
-    if (left_lonlat is not None
-            and dist_col is None
-            and not predicate.endswith("_sphere")
             and predicate in ("intersects", "coveredby", "within", "dwithin")
-            and (predicate != "dwithin" or ldist_col is not None
-                 or isinstance(distance, (int, float)))
-            and all(g is None or g[0] in _jvm_ok_types
-                    for g in r_geoms.values())
-            and any(g is not None for g in r_geoms.values())
-            and max((_edge_count(g) for g in r_geoms.values()
-                     if g is not None), default=0) <= MAX_JVM_POLY_EDGES):
-        return _poly_jvm_join(left, right_i, r_geoms, predicate,
-                              left_geom, res, left_lonlat,
-                              rcols=right.columns, how=how,
-                              distance=distance, pad=pad,
-                              ldist_col=ldist_col)
+            and shapes and shapes <= jvm_ok
+            and not probe_exploded()):
+        return _jvm_join(left, side, predicate, distance, left_geom, res,
+                         pad, left_lonlat, rcols=right.columns,
+                         ldist_col=ldist_col, how=how)
 
     dist = float(distance) if isinstance(distance, (int, float)) else None
 
@@ -1687,6 +1677,20 @@ def _is_axis_rect(g) -> bool:
 
 MAX_JVM_POLY_EDGES = 512  # per build geometry; beyond this the numpy
                           # batch-vectorized refine amortizes better
+# build geometry types the all-JVM tier refines over edge arrays
+_JVM_TYPES = ("Point", "MultiPoint", "LineString", "MultiLineString",
+              "Polygon", "MultiPolygon")
+
+
+_EDGES = ArrayType(StructType([StructField(c, DoubleType())
+                               for c in ("ax", "ay", "bx", "by")]))
+# the all-JVM tier's cell table: (cell, build row, bbox, edge arrays)
+_CELL_TABLE = StructType(
+    [StructField("__cell", LongType()), StructField("__ridx", LongType())]
+    + [StructField(c, DoubleType()) for c in ("__x0", "__y0", "__x1", "__y1")]
+    + [StructField("__parts", ArrayType(StructType([
+        StructField("shell", _EDGES), StructField("holes", ArrayType(_EDGES)),
+        StructField("edges", _EDGES)])))])
 
 
 def _edge_count(g) -> int:
@@ -1790,7 +1794,9 @@ def _pip_refine_sql(px: str, py: str, parts_col: str, boundary: bool) -> str:
 
 def _dwithin_refine_sql(px: str, py: str, parts_col: str, dexpr: str) -> str:
     """SQL HOF for ST_DWithin(point, geom, d): boundary-inclusive inside
-    (distance 0) OR some edge at point-to-segment distance ≤ d — mirrors
+    (distance 0, so only for d ≥ 0: a NULL or negative d matches nothing,
+    as in the numpy kernels and the box refine) OR some edge at
+    point-to-segment distance ≤ d — mirrors
     kernels.points_to_geom_distance / points_seg_dist (same clamp-projection
     op order; ``hypot`` both sides; zero-length edges take the plain point
     distance branch)."""
@@ -1802,252 +1808,85 @@ def _dwithin_refine_sql(px: str, py: str, parts_col: str, dexpr: str) -> str:
            f"{py} - (e.ay + {t} * (e.by - e.ay))) END")
     near = f"exists({parts_col}, p -> exists(p.edges, e -> {seg} <= {dexpr}))"
     inside = _pip_refine_sql(px, py, parts_col, boundary=True)
-    return f"(({inside}) OR ({near}))"
+    return f"((({dexpr}) >= 0.0D AND ({inside})) OR ({near}))"
 
 
-def _poly_jvm_join(left: DataFrame, right_i: DataFrame, r_geoms: dict,
-                   predicate: str, left_geom: str, res: int,
-                   left_lonlat, rcols: list, how: str = "inner",
-                   distance=None, pad: float = 0.0,
-                   ldist_col: str | None = None) -> DataFrame:
-    """All-JVM broadcast spatial join for general (Multi)Polygon dimension
-    layers: the cell table carries each polygon's edge arrays as nested
-    structs, the even-odd crossing-number refine runs as a SQL
-    higher-order-function expression — the whole join is JVM-side, no
-    ArrowEvalPython row queue anywhere.  At 100 TB the probe side streams
-    through two BroadcastHashJoins; nothing shuffles or collects.
+def _jvm_join(left: DataFrame, side: _BuildSide, predicate: str, distance,
+              left_geom: str, res: int, pad: float, left_lonlat,
+              rcols: list, ldist_col: str | None, how: str) -> DataFrame:
+    """All-JVM broadcast spatial join: the probe's cell key joins the
+    build side's broadcast cell table (``_BuildSide.cell_table``), one
+    conditional refine runs in codegen, and the payload comes back by row
+    index (``right_i`` carries __ridx; the payload never visits the
+    driver).  At 100 TB the probe side streams through two
+    BroadcastHashJoins; nothing shuffles or collects.
 
-    Analogue of the reference's broadcast R-tree probe
-    (rust/sedona-spatial-join/src/index/) for the low-vertex dimension
-    layers that dominate web geocoding (admin areas, tile grids, metros)."""
-    from pyspark.sql.types import (ArrayType, DoubleType, LongType,
-                                   StructField, StructType)
+    The refine picks its arithmetic per build row, as the reference's
+    broadcast probe picks a prepared refiner per build geometry
+    (rust/sedona-spatial-join/src/index/):
 
-    spark = left.sparkSession
-    edge_t = StructType([
-        StructField("ax", DoubleType()), StructField("ay", DoubleType()),
-        StructField("bx", DoubleType()), StructField("by", DoubleType())])
-    part_t = StructType([
-        StructField("shell", ArrayType(edge_t)),
-        StructField("holes", ArrayType(ArrayType(edge_t))),
-        StructField("edges", ArrayType(edge_t))])
-    schema = StructType([
-        StructField("__cell", LongType()), StructField("__ridx", LongType()),
-        StructField("__parts", ArrayType(part_t))])
+    - box rows (``__parts`` NULL) take exact point-vs-box intervals:
+      intersects/coveredby = closed box, within = open box, dwithin =
+      clamp distance ≤ d;
+    - every other row takes the crossing-number / on-edge /
+      segment-distance higher-order-function refine over its edge
+      arrays, arithmetically identical to the numpy kernels.  CASE
+      branches are lazy, so the O(edges) lambda runs only there.
 
-    cell_rows = []
-    for i, g in r_geoms.items():
-        if g is None:
-            continue
-        xmin, ymin, xmax, ymax = K.geom_bbox(g)
-        if np.isnan(xmin):
-            continue
-        parts = _geom_edge_parts(g)
-        for c in grid.covering_cells(xmin - pad, ymin - pad,
-                                     xmax + pad, ymax + pad, res):
-            cell_rows.append((int(c), int(i), parts))
-    rcells = spark.createDataFrame(cell_rows, schema)
-
+    mark/left_semi/left_anti/left run as JVM semi/anti joins on the same
+    broadcast table: still zero Python, no finisher shuffle."""
+    right_i = side.right_i
+    rcells = side.cell_table(res, pad)
     if left_lonlat is not None:
-        lon_c, lat_c = left_lonlat
-        l_cells = left.withColumn(
-            "__cell", F.expr(grid.cell_expr_sql(lon_c, lat_c, res)))
-        px, py = lon_c, lat_c
-    else:
+        px, py = left_lonlat
+        l_cells = left
+    else:  # an all-point WKB probe
         from sedona_db_spark.functions.scalar import st_x, st_y
-        l_cells = (left.withColumn("__lon", st_x(F.col(left_geom)))
-                       .withColumn("__lat", st_y(F.col(left_geom)))
-                       .withColumn("__cell", F.expr(
-                           grid.cell_expr_sql("__lon", "__lat", res))))
         px, py = "__lon", "__lat"
-
+        l_cells = (left.withColumn(px, st_x(F.col(left_geom)))
+                       .withColumn(py, st_y(F.col(left_geom))))
+    l_cells = l_cells.withColumn("__cell",
+                                 F.expr(grid.cell_expr_sql(px, py, res)))
+    plon, plat = F.col(px), F.col(py)
+    x0, y0, x1, y1 = (F.col(c) for c in ("__x0", "__y0", "__x1", "__y1"))
     if predicate == "dwithin":
-        dexpr = (ldist_col if ldist_col is not None
-                 else repr(float(distance)) + "D")
-        cond = F.expr(_dwithin_refine_sql(px, py, "__parts", dexpr))
-    else:
-        cond = F.expr(_pip_refine_sql(px, py, "__parts",
-                                      boundary=predicate != "within"))
-    cand = l_cells.join(F.broadcast(rcells), on="__cell")
-    if how in ("left_semi", "left_anti", "mark", "left"):
-        rc = rcells.withColumnRenamed("__cell", "__rcell")
-        jcond = (F.col("__cell") == F.col("__rcell")) & cond
-        if how in ("left_semi", "left_anti"):
-            return (l_cells.join(F.broadcast(rc), jcond, how)
-                    .select(*left.columns))
-        if how == "mark":
-            semi = (l_cells.join(F.broadcast(rc), jcond, "left_semi")
-                    .select(*left.columns).withColumn("mark", F.lit(True)))
-            anti = (l_cells.join(F.broadcast(rc), jcond, "left_anti")
-                    .select(*left.columns).withColumn("mark", F.lit(False)))
-            return semi.unionByName(anti)
-        # left outer: matched pairs ∪ anti rows padded with NULL payload
-        pairs = (cand.where(cond).join(F.broadcast(right_i), on="__ridx")
-                 .select(*left.columns, *rcols))
-        anti = l_cells.join(F.broadcast(rc), jcond, "left_anti") \
-            .select(*left.columns)
-        for c in rcols:
-            anti = anti.withColumn(
-                c, F.lit(None).cast(right_i.schema[c].dataType))
-        return pairs.unionByName(anti)
-
-    matched = cand.where(cond)
-    return (matched.join(F.broadcast(right_i), on="__ridx")
-                   .select(*left.columns, *rcols))
-
-
-def _mixed_jvm_join(left: DataFrame, right_i: DataFrame, rects: dict,
-                    polys: dict, predicate: str, left_geom: str, res: int,
-                    pad: float, left_lonlat, rcols: list) -> DataFrame:
-    """All-JVM broadcast join for a MIXED axis-rect + polygon dimension
-    layer (inner, lon/lat probe): ONE broadcast cell table carries the
-    rects' interval bounds and the polygons' edge arrays side by side
-    (``__parts`` NULL on rect rows), and the refine is a single CASE
-    expression — interval arithmetic when ``__parts`` is NULL, the
-    crossing-number HOF otherwise.  One probe-side pass and one
-    broadcast join total, versus the two-join union formulation that
-    re-generated / re-scanned the probe side once per tier (the HOF
-    lambda still only evaluates on true-polygon candidate rows: CASE
-    branches are lazy in codegen)."""
-    from pyspark.sql.types import (ArrayType, DoubleType, LongType,
-                                   StructField, StructType)
-
-    spark = left.sparkSession
-    edge_t = StructType([
-        StructField("ax", DoubleType()), StructField("ay", DoubleType()),
-        StructField("bx", DoubleType()), StructField("by", DoubleType())])
-    part_t = StructType([
-        StructField("shell", ArrayType(edge_t)),
-        StructField("holes", ArrayType(ArrayType(edge_t))),
-        StructField("edges", ArrayType(edge_t))])
-    schema = StructType([
-        StructField("__cell", LongType()), StructField("__ridx", LongType()),
-        StructField("__x0", DoubleType()), StructField("__y0", DoubleType()),
-        StructField("__x1", DoubleType()), StructField("__y1", DoubleType()),
-        StructField("__parts", ArrayType(part_t))])
-
-    cell_rows = []
-    for i, g in rects.items():
-        x0, y0, x1, y1 = K.geom_bbox(g)
-        if np.isnan(x0):
-            continue
-        for c in grid.covering_cells(x0 - pad, y0 - pad, x1 + pad,
-                                     y1 + pad, res):
-            cell_rows.append((int(c), int(i), x0, y0, x1, y1, None))
-    for i, g in polys.items():
-        x0, y0, x1, y1 = K.geom_bbox(g)
-        if np.isnan(x0):
-            continue
-        parts = _geom_edge_parts(g)
-        for c in grid.covering_cells(x0 - pad, y0 - pad, x1 + pad,
-                                     y1 + pad, res):
-            cell_rows.append((int(c), int(i), None, None, None, None,
-                              parts))
-    rcells = spark.createDataFrame(cell_rows, schema)
-
-    lon_c, lat_c = left_lonlat
-    l_cells = left.withColumn(
-        "__cell", F.expr(grid.cell_expr_sql(lon_c, lat_c, res)))
-    plon, plat = F.col(lon_c), F.col(lat_c)
-    if predicate == "within":
-        rect_cond = ((plon > F.col("__x0")) & (plon < F.col("__x1"))
-                     & (plat > F.col("__y0")) & (plat < F.col("__y1")))
-    else:
-        rect_cond = ((plon >= F.col("__x0")) & (plon <= F.col("__x1"))
-                     & (plat >= F.col("__y0")) & (plat <= F.col("__y1")))
-    hof_cond = F.expr(_pip_refine_sql(lon_c, lat_c, "__parts",
-                                      boundary=predicate != "within"))
-    cond = F.when(F.col("__parts").isNull(), rect_cond).otherwise(hof_cond)
-    cand = l_cells.join(F.broadcast(rcells), on="__cell")
-    return (cand.where(cond).join(F.broadcast(right_i), on="__ridx")
-                .select(*left.columns, *rcols))
-
-
-def _rect_jvm_join(left: DataFrame, right_i: DataFrame, r_geoms: dict,
-                   predicate: str, distance, left_geom: str, res: int,
-                   pad: float, left_lonlat, rcols: list,
-                   ldist_col: str | None = None,
-                   how: str = "inner") -> DataFrame:
-    """All-JVM broadcast spatial join for axis-aligned dimension layers.
-
-    Cell table (cell, __ridx, bounds) broadcast-joined on the cell key,
-    interval-arithmetic refine in whole-stage codegen, payload joined back
-    by row index (right_i carries __ridx; payload never visits the driver).
-    Point-vs-rectangle semantics are exact: intersects/coveredby = closed
-    box, within = open box, dwithin = clamp-distance ≤ d.
-
-    Join types mark/left_semi/left_anti/left run as JVM semi/anti joins on
-    the same broadcast cell table — still zero Python, no finisher shuffle."""
-    import pandas as pd
-
-    spark = left.sparkSession
-    cell_rows = []
-    for i, g in r_geoms.items():
-        if g is None:
-            continue
-        x0, y0, x1, y1 = K.geom_bbox(g)
-        if np.isnan(x0):
-            continue
-        for c in grid.covering_cells(x0 - pad, y0 - pad, x1 + pad, y1 + pad, res):
-            cell_rows.append((int(c), i, x0, y0, x1, y1))
-    rcells = spark.createDataFrame(pd.DataFrame(
-        cell_rows, columns=["__cell", "__ridx", "__x0", "__y0", "__x1", "__y1"]))
-
-    if left_lonlat is not None:
-        lon_c, lat_c = left_lonlat
-        l_cells = left.withColumn(
-            "__cell", F.expr(grid.cell_expr_sql(lon_c, lat_c, res)))
-        plon, plat = F.col(lon_c), F.col(lat_c)
-    else:
-        from sedona_db_spark.functions.scalar import st_x, st_y
-        l_cells = (left.withColumn("__lon", st_x(F.col(left_geom)))
-                       .withColumn("__lat", st_y(F.col(left_geom)))
-                       .withColumn("__cell", F.expr(
-                           grid.cell_expr_sql("__lon", "__lat", res))))
-        plon, plat = F.col("__lon"), F.col("__lat")
-
-    cand = l_cells.join(F.broadcast(rcells), on="__cell")
-    if predicate in ("intersects", "coveredby"):
-        cond = ((plon >= F.col("__x0")) & (plon <= F.col("__x1"))
-                & (plat >= F.col("__y0")) & (plat <= F.col("__y1")))
-    elif predicate == "within":
-        cond = ((plon > F.col("__x0")) & (plon < F.col("__x1"))
-                & (plat > F.col("__y0")) & (plat < F.col("__y1")))
-    else:  # dwithin: euclidean distance to the box via coordinate clamping
-        dx = F.greatest(F.col("__x0") - plon, plon - F.col("__x1"), F.lit(0.0))
-        dy = F.greatest(F.col("__y0") - plat, plat - F.col("__y1"), F.lit(0.0))
+        # euclidean distance to the box via coordinate clamping; a
+        # probe-side per-row distance stays a column
+        dx = F.greatest(x0 - plon, plon - x1, F.lit(0.0))
+        dy = F.greatest(y0 - plat, plat - y1, F.lit(0.0))
         if ldist_col is not None:
-            dcol = F.col(ldist_col)  # probe-side per-row distance, JVM-side
-        elif isinstance(distance, (int, float)):
-            dcol = F.lit(float(distance))
+            d, dexpr = F.col(ldist_col), ldist_col
         else:
-            dcol = distance
-        cond = F.sqrt(dx * dx + dy * dy) <= dcol
-    if how in ("left_semi", "left_anti", "mark", "left"):
-        rc = rcells.withColumnRenamed("__cell", "__rcell")
-        jcond = (F.col("__cell") == F.col("__rcell")) & cond
-        if how in ("left_semi", "left_anti"):
-            return (l_cells.join(F.broadcast(rc), jcond, how)
-                    .select(*left.columns))
-        if how == "mark":
-            semi = (l_cells.join(F.broadcast(rc), jcond, "left_semi")
-                    .select(*left.columns).withColumn("mark", F.lit(True)))
-            anti = (l_cells.join(F.broadcast(rc), jcond, "left_anti")
-                    .select(*left.columns).withColumn("mark", F.lit(False)))
-            return semi.unionByName(anti)
-        # left outer: matched pairs ∪ anti rows padded with NULL payload
-        pairs = (cand.where(cond).join(F.broadcast(right_i), on="__ridx")
-                 .select(*left.columns, *rcols))
-        anti = l_cells.join(F.broadcast(rc), jcond, "left_anti") \
-            .select(*left.columns)
-        for c in rcols:
-            anti = anti.withColumn(
-                c, F.lit(None).cast(right_i.schema[c].dataType))
-        return pairs.unionByName(anti)
+            d, dexpr = F.lit(float(distance)), repr(float(distance)) + "D"
+        box = F.sqrt(dx * dx + dy * dy) <= d
+        edges = _dwithin_refine_sql(px, py, "__parts", dexpr)
+    elif predicate == "within":
+        box = (plon > x0) & (plon < x1) & (plat > y0) & (plat < y1)
+        edges = _pip_refine_sql(px, py, "__parts", boundary=False)
+    else:  # intersects / coveredby ≡ boundary-inclusive
+        box = (plon >= x0) & (plon <= x1) & (plat >= y0) & (plat <= y1)
+        edges = _pip_refine_sql(px, py, "__parts", boundary=True)
+    cond = F.when(F.col("__parts").isNull(), box).otherwise(F.expr(edges))
 
-    matched = cand.where(cond)
-    return (matched.join(F.broadcast(right_i), on="__ridx")
-                   .select(*left.columns, *rcols))
+    if how in ("inner", "left"):
+        pairs = (l_cells.join(F.broadcast(rcells), on="__cell").where(cond)
+                 .join(F.broadcast(right_i), on="__ridx")
+                 .select(*left.columns, *rcols))
+        if how == "inner":
+            return pairs
+    rc = F.broadcast(rcells.withColumnRenamed("__cell", "__rcell"))
+    jcond = (F.col("__cell") == F.col("__rcell")) & cond
+    if how in ("left_semi", "left_anti"):
+        return l_cells.join(rc, jcond, how).select(*left.columns)
+    anti = l_cells.join(rc, jcond, "left_anti").select(*left.columns)
+    if how == "mark":
+        semi = l_cells.join(rc, jcond, "left_semi").select(*left.columns)
+        return (semi.withColumn("mark", F.lit(True))
+                    .unionByName(anti.withColumn("mark", F.lit(False))))
+    # left outer: matched pairs ∪ anti rows padded with NULL payload
+    for c in rcols:
+        anti = anti.withColumn(c, F.lit(None).cast(right_i.schema[c].dataType))
+    return pairs.unionByName(anti)
 
 
 def _points_strictly_within(px, py, g):

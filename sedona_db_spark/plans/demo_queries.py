@@ -227,8 +227,9 @@ ORACLE_PIP_COUNT = (
 
 # hexagon layer: 25 convex (non-rectangular!) polygons derived from
 # n_nationkey — the lon/lat probe side routes this join through the
-# all-JVM higher-order-function crossing-number path (_poly_jvm_join),
-# putting that code path under the driver's DuckDB-oracle gate.
+# all-JVM tier (_jvm_join), whose hexagon rows all take the
+# higher-order-function crossing-number refine, putting that refine under
+# the driver's DuckDB-oracle gate.
 # Vertex offsets are fixed decimal literals (no trig): the same doubles in
 # both engines, and the minimum distance between a 1e-6-lattice doc point
 # and a hexagon edge line is ~3e-8 (gcd structure of 7.8/4.5 offsets), far
@@ -311,9 +312,10 @@ ORACLE_DWITHIN = (
 
 def q_dwithin_jvm_pairs(spark, sf_dir):
     """Same distance join as dwithin_pairs but with a lon/lat probe side —
-    routes through the all-JVM HOF refine (zero Python operators), putting
-    _poly_jvm_join's clamp-projection segment-distance tier under the
-    driver's oracle gate alongside pip_hex_pairs' crossing-number tier."""
+    routes through the all-JVM tier (_jvm_join, zero Python operators),
+    whose supplier points are degenerate boxes: the point-as-box clamp
+    distance refine goes under the driver's oracle gate alongside
+    pip_hex_pairs' crossing-number refine."""
     from sedona_db_spark.functions.scalar import st_point
     from sedona_db_spark.operators import spatial_join
     d = (_t(spark, sf_dir, "documents")
@@ -2318,8 +2320,8 @@ def _tagged_union_sql(tag_col: str, branches) -> str:
 
 def q_dwithin_both(spark, sf_dir):
     """Distance join under BOTH execution tiers in one driver slot:
-    'py' = the broadcast python refine, 'jvm' = the all-JVM HOF
-    clamp-projection refine (round 3).  Identical pair sets, same
+    'py' = the broadcast python refine, 'jvm' = the all-JVM tier's
+    point-as-box clamp distance refine.  Identical pair sets, same
     oracle twice."""
     return _tagged_union("path", [
         ("py", q_dwithin_pairs(spark, sf_dir)),

@@ -355,6 +355,88 @@ def test_new_session_does_not_reuse_old_broadcast(tmp_path):
                    [want, 0], True, [want, 1], True]
 
 
+def test_jvm_cell_table_built_once(spark, monkeypatch):
+    """Repeated lon/lat joins against one stable mixed rect + polygon
+    layer classify each build row once and build the all-JVM tier's cell
+    table once, with brute-force pairs and no Python in the plan."""
+    import numpy as np
+    from sedona_db_spark.sources.fixtures import regions_grid
+    rpd = regions_grid(n_side=4, bounds=(-33.0, -17.0, 27.0, 23.0),
+                       metro_hotspots=3, seed=5)
+    regions = spark.createDataFrame(rpd)
+    R = [W.decode(bytes(g)) for g in rpd["geom"]]
+    rng = np.random.default_rng(5)
+    xy = rng.uniform((-35.0, -19.0), (29.0, 25.0), (300, 2))
+    pts = spark.createDataFrame(pd.DataFrame(
+        {"id": range(len(xy)), "lon": xy[:, 0], "lat": xy[:, 1]}))
+    exp = {(i, int(rpd["region_id"][j])) for i, j in _brute(
+        [("Point", p) for p in xy], R, K.geom_covered_by)}
+    calls = {"table": 0, "rect": 0}
+    real_table, real_rect = SJ._BuildSide._cell_table, SJ._is_axis_rect
+
+    def table(self, res, pad):
+        calls["table"] += 1
+        return real_table(self, res, pad)
+
+    def rect(g):
+        calls["rect"] += 1
+        return real_rect(g)
+    monkeypatch.setattr(SJ._BuildSide, "_cell_table", table)
+    monkeypatch.setattr(SJ, "_is_axis_rect", rect)
+    for _ in range(3):
+        j = spatial_join(pts, regions, "coveredby",
+                         left_lonlat=("lon", "lat"), right_geom="geom")
+        plan = j._jdf.queryExecution().toString()
+        assert "MapInPandas" not in plan and "EvalPython" not in plan
+        assert {(r["id"], r["region_id"]) for r in j.collect()} == exp
+    assert calls == {"table": 1, "rect": len(R)}
+
+
+def test_side_structures_made_once_under_threads():
+    """Threads sharing one build side make each derived structure once
+    while it stays cached, keep the side's LRU within MAX_INDEXES, and
+    weigh the side by the bytes its structures hold."""
+    import threading
+    import time
+    from collections import Counter, OrderedDict
+    side = object.__new__(SJ._BuildSide)
+    side.nbytes, side.stored = 100, 0
+    side.derived, side.lock = OrderedDict(), threading.Lock()
+    made = Counter()
+    errors = []
+
+    def make(k):
+        made[k] += 1
+        time.sleep(0.001)               # widen a check-then-act race
+        return f"v{k}", 10
+
+    def work():
+        try:
+            for i in range(2000):
+                k = i % 3
+                assert side._derived(k, lambda: make(k)) == f"v{k}"
+        except Exception as e:          # noqa: BLE001 - reported below
+            errors.append(e)
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=work) for _ in range(8)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(th.is_alive() for th in threads)
+    assert not errors
+    assert made == {0: 1, 1: 1, 2: 1}
+    assert side.weight() == 130
+    for k in range(3, 10):
+        side._derived(k, lambda: make(k))
+    assert len(side.derived) == SJ._BuildSide.MAX_INDEXES
+    assert side.weight() == 100 + 10 * SJ._BuildSide.MAX_INDEXES
+
+
 def test_memo_lru_eviction(monkeypatch):
     """_Memo evicts the least recently used entry past its entry bound,
     and past _BROADCAST_GEOM_BYTES of summed weight when it weighs."""

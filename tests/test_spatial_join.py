@@ -738,10 +738,15 @@ def test_validate_id_keys_flag(spark):
 
 
 def test_mixed_rect_poly_split_vs_brute(spark):
-    """Round-9 optimization: a mixed axis-rect + polygon build layer with a
-    lon/lat probe splits into an interval-refine join (rects) unioned with
-    the HOF refine join (true polygons).  Pair set must equal brute force,
-    and the plan must stay JVM-only (no Python operators)."""
+    """A mixed axis-rect + polygon build layer with a lon/lat probe takes
+    the all-JVM tier: one broadcast cell table whose rect rows carry
+    bounds and whose polygon rows carry edge arrays, refined by one CASE
+    (interval arithmetic for rects, the edge HOF for polygons).  Under
+    every predicate and join type the tier takes, with probes on grid
+    cell corners, rect corners and edges, polygon vertices and edges, and
+    at exactly the distance from them, and with NULL and negative probe
+    distances: the rows must equal the numpy brute force, and the plan
+    must stay JVM-only (no Python operators)."""
     import pandas as pd
     from sedona_db_spark.sources.fixtures import regions_grid
 
@@ -749,29 +754,72 @@ def test_mixed_rect_poly_split_vs_brute(spark):
         regions_grid(n_side=5, bounds=(-20.0, -20.0, 20.0, 20.0),
                      metro_hotspots=4))
     R = {r["region_id"]: W.decode(bytes(r["geom"])) for r in regions.collect()}
-    kinds = {W.decode(bytes(r["geom"]))[0] for r in regions.collect()}
+    d = 0.75
     rng = np.random.default_rng(11)
-    n = 400
+    xy = [tuple(p) for p in rng.uniform(-22, 22, (400, 2))]
+    # grid cell corners at the resolutions around the one the join picks
+    for res in (4, 5, 6, 7):
+        w, h = 360.0 / (1 << res), 180.0 / (1 << res)
+        xs = [-180.0 + k * w for k in range(1 << res)]
+        ys = [-90.0 + k * h for k in range(1 << res)]
+        xy += [(x, y) for x in xs for y in ys
+               if -22 <= x <= 22 and -22 <= y <= 22][::max(1, res - 4)]
+    # rect corners, edge points, and points at distance d past them
+    for k in range(6):
+        for j in range(6):
+            x, y = -20.0 + 8.0 * k, -20.0 + 8.0 * j
+            xy += [(x, y), (x, y + 3.0), (x + 3.0, y), (x + d, y + 3.0),
+                   (x + 3.0, y - d), (x - d, y)]
+    # polygon vertices, edge midpoints, and vertices pushed d outward
+    for g in R.values():
+        ring = np.asarray(g[1][0])
+        if len(ring) == 5:
+            continue
+        cx, cy = ring[:-1].mean(axis=0)
+        for (ax, ay), (bx, by) in zip(ring[:-1], ring[1:]):
+            xy += [(ax, ay), ((ax + bx) / 2, (ay + by) / 2),
+                   (ax + d * np.sign(ax - cx), ay)]
+    n = len(xy)
+    dist = rng.uniform(0.0, 2.0, n)
+    dist[::3] = d
+    dist[1::7] = np.nan     # NULL in Spark: matches nothing
+    dist[2::11] = -0.5      # matches nothing, inside a polygon too
     pts = spark.createDataFrame(pd.DataFrame({
-        "id": range(n),
-        "lon": rng.uniform(-22, 22, n),
-        "lat": rng.uniform(-22, 22, n)}))
-    lons = {r["id"]: (r["lon"], r["lat"]) for r in pts.collect()}
-    for pred, fn in (("coveredby", K.geom_covered_by),
-                     ("intersects", K.geom_intersects)):
-        j = spatial_join(pts, regions, pred,
-                         left_lonlat=("lon", "lat"), right_geom="geom")
-        plan = j._jdf.queryExecution().toString()
-        assert "MapInPandas" not in plan and "EvalPython" not in plan
-        # both refine tiers must actually appear (union of two joins)
-        got = {(r["id"], r["region_id"]) for r in j.collect()}
-        exp = set()
-        for i, (x, y) in lons.items():
-            p = ("Point", np.array([x, y]))
-            for rid, g in R.items():
-                if fn(p, g):
-                    exp.add((i, rid))
-        assert got == exp, pred
+        "id": range(n), "lon": [p[0] for p in xy],
+        "lat": [p[1] for p in xy], "dist": dist}))
+    P = [("Point", np.array(p)) for p in xy]
+
+    cases = (("coveredby", {}, lambda i, g: K.geom_covered_by(P[i], g)),
+             ("intersects", {}, lambda i, g: K.geom_intersects(P[i], g)),
+             ("within", {}, lambda i, g: K.geom_within(P[i], g)),
+             ("dwithin", {"distance": d},
+              lambda i, g: K.geom_dwithin(P[i], g, d)),
+             ("dwithin", {"distance": "dist", "distance_side": "probe"},
+              lambda i, g: K.geom_dwithin(P[i], g, dist[i])))
+    for pred, kw, fn in cases:
+        exp = {(i, rid) for i in range(n) for rid, g in R.items()
+               if fn(i, g)}
+        hit = {i for i, _ in exp}
+        for how in ("inner", "left", "left_semi", "left_anti", "mark"):
+            j = spatial_join(pts, regions, pred, how,
+                             left_lonlat=("lon", "lat"), right_geom="geom",
+                             **kw)
+            plan = j._jdf.queryExecution().executedPlan().toString()
+            assert "MapInPandas" not in plan and "EvalPython" not in plan
+            rows = j.collect()
+            case = (pred, kw.get("distance"), how)
+            if how == "inner":
+                assert {(r["id"], r["region_id"]) for r in rows} == exp, case
+            elif how == "left":
+                assert len(rows) == len(exp) + n - len(hit), case
+                assert {(r["id"], r["region_id"]) for r in rows} == \
+                    exp | {(i, None) for i in set(range(n)) - hit}, case
+            elif how == "mark":
+                assert {r["id"]: r["mark"] for r in rows} == \
+                    {i: i in hit for i in range(n)}, case
+            else:
+                want = hit if how == "left_semi" else set(range(n)) - hit
+                assert sorted(r["id"] for r in rows) == sorted(want), case
 
 
 def test_byte_guard_post_collect_fallback(data, spark, monkeypatch):

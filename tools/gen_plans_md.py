@@ -45,28 +45,30 @@ def main():
     j1 = spatial_join(pages, rects, "coveredby", left_lonlat=("lon", "lat"),
                       right_geom="geom")
     sections.append((
-        "Strategy 1 — all-JVM interval join (axis-aligned dimension layer)",
+        "Strategy 1 — all-JVM conditional-refine join (rect layer)",
         "Cell keys are codegen expressions, the cell join is a "
-        "BroadcastHashJoin, the refine is a whole-stage-codegen Filter; no "
-        "Python anywhere, and the big side never shuffles.",
+        "BroadcastHashJoin against the build side's cell table, and the "
+        "refine is one CASE: rect and point rows (no edge arrays) take "
+        "interval arithmetic in whole-stage codegen; no Python anywhere, "
+        "and the big side never shuffles.",
         simple_plan(j1)))
 
     j2 = spatial_join(pages, polys, "coveredby", left_lonlat=("lon", "lat"),
                       right_geom="geom")
     sections.append((
-        "Strategy 2 — all-JVM HOF join (lon/lat probe × low-vertex dimension layer)",
-        "General (Multi)Polygon/line/point layers up to 512 edges, probe "
-        "coordinates already JVM-visible: the broadcast cell table carries "
-        "per-geometry edge arrays, and the even-odd crossing-number + "
-        "on-edge refine (and dwithin's clamp-projection segment distance) "
-        "runs as a SQL higher-order-function Filter — arithmetically "
-        "identical to the numpy kernels, ZERO Python operators anywhere in "
-        "the plan.",
+        "Strategy 1 — all-JVM conditional-refine join (polygon layer)",
+        "The same tier on (Multi)Polygon/line/point rows up to 512 edges, "
+        "probe coordinates already JVM-visible: their cell-table rows "
+        "carry edge arrays, and the CASE's other branch runs the even-odd "
+        "crossing-number + on-edge refine (and dwithin's clamp-projection "
+        "segment distance) as a SQL higher-order function — "
+        "arithmetically identical to the numpy kernels, ZERO Python "
+        "operators anywhere in the plan.",
         simple_plan(j2)))
 
     j2b = spatial_join(pts, polys, "intersects")
     sections.append((
-        "Strategy 2b — one-pass broadcast mapInPandas (WKB probe or high-vertex layer)",
+        "Strategy 2 — one-pass broadcast mapInPandas (WKB probe or high-vertex layer)",
         "WKB probe columns (and layers beyond the 512-edge HOF cap): one "
         "MapInPandas over the big side — decode + refine fused in a single "
         "numpy-vectorized pass that emits matches only — then a broadcast "
