@@ -11,6 +11,9 @@ bench — bench.py stays frozen.  Modes:
                                            # probes against one layer, and
                                            # N lon/lat joins against the
                                            # 264-region mixed layer
+  python bench_extra.py leaves [N]         # the 264-region world layer's
+                                           # leaf table, and the median of
+                                           # N 4M-page coveredby joins
 
 Reads $SPARK_GRAFT_SF_DIR / $SPARK_GRAFT_CPUS like bench.py.
 """
@@ -161,6 +164,56 @@ def rejoin(spark, n: int = 6):
                 "pip_construct_s": round(t4 - t3, 3)}), flush=True)
 
 
+def leaves(spark, n: int = 5) -> dict:
+    """The all-JVM tier's leaf refine on ``pages_pip``'s layer: the
+    264-region world layer of 256 rects and 8 metro 12-gons.
+
+    Prints the coarse join resolution and the fine leaf level, the
+    refined coarse cells, the leaf rows by kind, the most local edges and
+    toggles in any EDGE leaf, whether the side fell back to the lambda
+    refine (and why), and whether the cell join runs in whole-stage
+    codegen.  Then times ``n`` warm lon/lat ``coveredby`` joins of 4M
+    synthetic pages with that layer, each counted per region and
+    collected, and prints their median (after the untimed join whose
+    plan it reads)."""
+    import importlib
+    from sedona_db_spark.operators import spatial_join
+    from sedona_db_spark.sources.fixtures import regions_grid
+    from sedona_db_spark.webtext import pages_to_points, synth_pages
+    SJ = importlib.import_module("sedona_db_spark.operators.spatial_join")
+    regions = spark.createDataFrame(regions_grid(
+        n_side=16, bounds=(-180.0, -90.0, 180.0, 90.0), metro_hotspots=8))
+    pages = pages_to_points(synth_pages(spark, 4_000_000)).select(
+        "url", "lon", "lat", "geom")
+
+    def join():
+        df = spatial_join(pages, regions, "coveredby",
+                          left_lonlat=("lon", "lat"), right_geom="geom"
+                          ).groupBy("region_id").count()
+        df.collect()
+        return df
+    plan = join()._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    cell_join = next((ln for ln in final.splitlines()
+                      if "BroadcastHashJoin [__cell" in ln), "")
+    out = {"cell_join_codegen": cell_join.lstrip(" :+-").startswith("*(")}
+    side = next(reversed(SJ._BUILD_SIDES.values()))[1]
+    res = next(k[1] for k in side.derived if k[0] == "leaves")
+    lv = side.leaf_table(res)
+    out.update(res=res, fine_res=lv.fine_res, refined_cells=len(lv.refined),
+               leaves=lv.counts, max_edges=lv.max_edges,
+               max_toggles=lv.max_toggles, fell_back=lv.reason is not None,
+               reason=lv.reason)
+    times = []
+    for _ in range(n):
+        t0 = time.perf_counter()
+        join()
+        times.append(time.perf_counter() - t0)
+    out.update(latency_s=[round(t, 3) for t in times],
+               median_s=round(statistics.median(times), 3))
+    return out
+
+
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     mode = sys.argv[1] if len(sys.argv) > 1 else "phases"
@@ -174,6 +227,11 @@ def main():
     if mode == "rejoin":
         spark = get_session()
         rejoin(spark, int(names[0]) if names else 6)
+        spark.stop()
+        return
+    if mode == "leaves":
+        spark = get_session()
+        print(json.dumps(leaves(spark, int(names[0]) if names else 5)))
         spark.stop()
         return
 

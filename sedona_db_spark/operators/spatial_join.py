@@ -52,6 +52,7 @@ from sedona_db_spark import grid
 from sedona_db_spark.functions.scalar import PREDICATE_KERNELS
 from sedona_db_spark.geometry import kernels as K
 from sedona_db_spark.geometry import wkb as W
+from sedona_db_spark.operators import leaf_refine as LR
 
 # predicates the broadcast tier refines with vectorized point kernels; a
 # probe with non-point rows takes the tier for any planar predicate of the
@@ -183,7 +184,10 @@ def _covering_cells_padcol_udf(res: int):
             if np.isnan(xmin):
                 out.append([])
                 continue
-            d = float(p) if p is not None else 0.0
+            d = float(p) if p is not None else np.nan
+            if np.isnan(d):     # a NULL or NaN distance matches nothing
+                out.append([])
+                continue
             out.append(grid.covering_cells(
                 xmin - d, ymin - d, xmax + d, ymax + d, res).tolist())
         return pd.Series(out)
@@ -474,6 +478,18 @@ def _sem_cached(cache: _Memo, df: DataFrame, tag, compute,
     return val
 
 
+def _distance(col: str) -> Column:
+    """A distance column with NaN as NULL: Spark ranks NaN above every
+    number (``x <= NaN`` holds), while a NaN distance, like a NULL one,
+    matches nothing."""
+    return F.when(~F.isnan(F.col(col)), F.col(col))
+
+
+def _max_distance(col: str) -> Column:
+    """The largest distance of ``col``, ignoring NULL and NaN."""
+    return F.max(_distance(col))
+
+
 def _count_bytes_stats(df: DataFrame, geom_col: str,
                        dist_col: str | None = None
                        ) -> tuple[int, float | None, float]:
@@ -492,7 +508,7 @@ def _count_bytes_stats(df: DataFrame, geom_col: str,
     def compute():
         aggs = [F.count(F.lit(1)).alias("n")]
         if dist_col is not None:
-            aggs.append(F.max(F.col(dist_col)).alias("mx"))
+            aggs.append(_max_distance(dist_col).alias("mx"))
         r = df.agg(*aggs).collect()[0]
         n = int(r["n"])
         mx = float(r["mx"] or 0.0) if dist_col is not None else 0.0
@@ -724,9 +740,9 @@ def _spatial_join_impl(
         from sedona_db_spark.geometry.algos import EARTH_RADIUS_M
         pad = _math.degrees(float(distance) / EARTH_RADIUS_M)
     elif predicate == "dwithin" and isinstance(distance, (int, float)):
-        pad = float(distance)
+        pad = 0.0 if np.isnan(distance) else float(distance)
     elif ldist_col is not None:
-        mx = left.agg(F.max(F.col(ldist_col))).collect()[0][0]
+        mx = left.agg(_max_distance(ldist_col)).collect()[0][0]
         pad = float(mx or 0.0)
 
     # ---- ONE cheap JVM stats job over the build side ------------------------
@@ -1030,9 +1046,9 @@ def _spatial_join_impl(
     }
     if predicate == "dwithin":
         if ldist_col is not None:
-            dcol = F.col(ldist_col)
+            dcol = _distance(ldist_col)
         elif dist_col is not None:
-            dcol = F.col(dist_col)
+            dcol = _distance(dist_col)
         elif isinstance(distance, (int, float)):
             dcol = F.lit(float(distance))
         else:
@@ -1193,8 +1209,8 @@ class _BuildSide:
     checkpointed frame with ``__ridx``, the rows' ids, WKBs, geometries
     and per-row pads, their WKB byte total, the checkpoint's stored bytes,
     mean bbox extent, each row's shape for the all-JVM tier, and the cell
-    index broadcasts and JVM cell tables built from them so far.  Raises
-    _BuildSideTooBig before decoding a side over the byte budget."""
+    index broadcasts and JVM cell and leaf tables built from them so far.
+    Raises _BuildSideTooBig before decoding a side over the byte budget."""
 
     MAX_INDEXES = 4
 
@@ -1240,9 +1256,10 @@ class _BuildSide:
         self.w, self.h = ((float(np.mean(ext[:, 2] - ext[:, 0])),
                            float(np.mean(ext[:, 3] - ext[:, 1])))
                           if len(ext) else (0.0, 0.0))
-        # cell indexes with their broadcasts, and JVM cell tables
+        # cell indexes with their broadcasts, and JVM cell and leaf
+        # tables (a leaf table is made from the cell rows: reentrant)
         self.derived: OrderedDict = OrderedDict()
-        self.lock = threading.Lock()
+        self.lock = threading.RLock()
 
     def stored_bytes(self) -> int | None:
         """Bytes the checkpoint's blocks hold in executor memory and on
@@ -1272,7 +1289,7 @@ class _BuildSide:
 
     def weight(self) -> int:
         """Bytes this side holds: its WKB on the driver, its checkpoint on
-        the executors and its cached JVM cell tables."""
+        the executors and its cached JVM cell and leaf tables."""
         with self.lock:
             return (self.nbytes + self.stored
                     + sum(b for _, b in self.derived.values()))
@@ -1311,17 +1328,44 @@ class _BuildSide:
                               and _edge_count(g) <= MAX_JVM_POLY_EDGES)
                 else "other" for g in self.geoms]
 
-    def cell_table(self, res: int, pad: float) -> DataFrame:
-        """The all-JVM tier's broadcast cell table at ``res``, built on
-        first use: one row per (covering cell, build row) with the row's
+    def cell_rows(self, res: int, pad: float) -> pd.DataFrame:
+        """The all-JVM tier's cell rows at ``res``, made on first use: one
+        row per (covering cell, build row) with the row's position, id,
         bbox ``__x0..__y1`` and, unless the row is a box, its edge arrays
         ``__parts``.  Rects and points are boxes: a point is the
         degenerate box [x,x]×[y,y], whose clamp distance IS the point
         distance and whose closed box IS coordinate equality (the tier
         takes points only where that holds: lon/lat probes, not
-        ``within``).  Built from pandas, so it plans as a LocalRelation."""
+        ``within``)."""
         return self._derived(("cells", res, pad),
                              lambda: self._cell_table(res, pad))
+
+    def cell_table(self, res: int, pad: float) -> DataFrame:
+        """The cell rows as a broadcastable table, refined by the lambda
+        refine.  Built from pandas, so it plans as a LocalRelation."""
+        def make():
+            pdf = self.cell_rows(res, pad)[[f.name for f in _CELL_TABLE]]
+            spark = self.right_i.sparkSession
+            return spark.createDataFrame(pdf, _CELL_TABLE), 0
+        return self._derived(("cell_table", res, pad), make)
+
+    def leaf_table(self, res: int) -> LR.Leaves:
+        """The leaf refine's tables at ``res`` (``leaf_refine``), made on
+        first use from the cell rows: ``cells`` (kind, bbox and slot id
+        per leaf and build row) and ``slots`` (each EDGE slot's values),
+        or the reason the side keeps the lambda refine."""
+        return self._derived(("leaves", res), lambda: self._leaf_table(res))
+
+    def _leaf_table(self, res: int) -> tuple:
+        boxes = {pos for pos, shape in enumerate(self.shapes)
+                 if shape in ("rect", "Point")}
+        leaves = LR.build(self.cell_rows(res, 0.0), self.geoms, boxes, res)
+        spark = self.right_i.sparkSession
+        if leaves.reason is None:
+            leaves.cells = spark.createDataFrame(leaves.cell_rows)
+        if leaves.slot_rows is not None:
+            leaves.slots = spark.createDataFrame(leaves.slot_rows)
+        return leaves, leaves.nbytes()
 
     def _cell_table(self, res: int, pad: float) -> tuple:
         rows, nbytes = [], 0
@@ -1338,10 +1382,11 @@ class _BuildSide:
             nbytes += len(cells) * (48 + (0 if box else 64 * _edge_count(
                 self.geoms[pos])))
             rid = int(self.ids[pos])
-            rows.extend((int(c), rid, x0, y0, x1, y1, parts) for c in cells)
-        pdf = pd.DataFrame(rows, columns=[f.name for f in _CELL_TABLE.fields])
-        spark = self.right_i.sparkSession
-        return spark.createDataFrame(pdf, _CELL_TABLE), nbytes
+            rows.extend((int(c), rid, x0, y0, x1, y1, parts, pos)
+                        for c in cells)
+        pdf = pd.DataFrame(rows, columns=[f.name for f in _CELL_TABLE.fields]
+                           + ["__pos"])
+        return pdf, nbytes
 
     def _cell_index(self, res, pad, sphere, d_cov) -> tuple:
         pads = self.pads
@@ -1387,7 +1432,7 @@ class _BuildSide:
 
 
 # weighed by the WKB held on the driver, the checkpoint held by the
-# executors and the cached JVM cell tables
+# executors and the cached JVM cell and leaf tables
 _BUILD_SIDES = _Memo("build_side", weigh=lambda hit: hit[1].weight())
 
 
@@ -1675,6 +1720,8 @@ def _is_axis_rect(g) -> bool:
     return pts == {(xmin, ymin), (xmax, ymin), (xmax, ymax), (xmin, ymax)}
 
 
+# predicates the all-JVM tier refines with the leaf refine when it can
+_LEAF_PREDICATES = ("intersects", "coveredby", "within")
 MAX_JVM_POLY_EDGES = 512  # per build geometry; beyond this the numpy
                           # batch-vectorized refine amortizes better
 # build geometry types the all-JVM tier refines over edge arrays
@@ -1707,30 +1754,6 @@ def _edge_count(g) -> int:
     return sum(max(len(r) - 1, 0) for rings in parts for r in rings)
 
 
-def _ring_edges(ring) -> list:
-    """[(ax, ay, bx, by), ...] — consecutive edges plus the closing edge
-    when the ring isn't explicitly closed (the numpy kernel's edge set:
-    points_in_ring / _points_on_ring_edge)."""
-    r = np.asarray(ring, dtype=np.float64)
-    if len(r) < 2:
-        return []
-    out = _path_edges(r)
-    if not (r[0, 0] == r[-1, 0] and r[0, 1] == r[-1, 1]):
-        out.append((float(r[-1, 0]), float(r[-1, 1]),
-                    float(r[0, 0]), float(r[0, 1])))
-    return out
-
-
-def _path_edges(line) -> list:
-    """Consecutive edges only — NO implicit closing edge (a point on the
-    first-to-last chord of an open linestring must not test on-edge; the
-    kernel's _points_on_path_edge)."""
-    r = np.asarray(line, dtype=np.float64)
-    return [(float(r[i, 0]), float(r[i, 1]),
-             float(r[i + 1, 0]), float(r[i + 1, 1]))
-            for i in range(len(r) - 1)]
-
-
 def _geom_edge_parts(g) -> list:
     """(shell_edges, hole_edge_lists, all_edges) triples for the JVM HOF
     refine.  Non-areal geometries carry everything in ``all_edges`` with an
@@ -1742,15 +1765,15 @@ def _geom_edge_parts(g) -> list:
     if name == "Polygon" or name == "MultiPolygon":
         out = []
         for rings in ([g[1]] if name == "Polygon" else g[1]):
-            ring_edges = [_ring_edges(r) for r in rings]
+            ring_edges = [LR.ring_edges(r) for r in rings]
             shell = ring_edges[0] if ring_edges else []
             out.append((shell, ring_edges[1:],
                         [e for es in ring_edges for e in es]))
         return out
     if name == "LineString":
-        return [([], [], _path_edges(g[1]))]
+        return [([], [], LR.path_edges(g[1]))]
     if name == "MultiLineString":
-        return [([], [], _path_edges(l)) for l in g[1]]
+        return [([], [], LR.path_edges(l)) for l in g[1]]
     if name == "Point":
         x, y = float(g[1][0]), float(g[1][1])
         return [([], [], [(x, y, x, y)])]
@@ -1814,29 +1837,37 @@ def _dwithin_refine_sql(px: str, py: str, parts_col: str, dexpr: str) -> str:
 def _jvm_join(left: DataFrame, side: _BuildSide, predicate: str, distance,
               left_geom: str, res: int, pad: float, left_lonlat,
               rcols: list, ldist_col: str | None, how: str) -> DataFrame:
-    """All-JVM broadcast spatial join: the probe's cell key joins the
-    build side's broadcast cell table (``_BuildSide.cell_table``), one
-    conditional refine runs in codegen, and the payload comes back by row
-    index (``right_i`` carries __ridx; the payload never visits the
-    driver).  At 100 TB the probe side streams through two
-    BroadcastHashJoins; nothing shuffles or collects.
+    """All-JVM broadcast spatial join: the probe's cell key joins a
+    broadcast table of the build side's rows per cell, the refine runs in
+    the JVM, and the payload comes back by row index (``right_i`` carries
+    __ridx; the payload never visits the driver).  At 100 TB the probe
+    side streams through BroadcastHashJoins; nothing shuffles or
+    collects.
 
     The refine picks its arithmetic per build row, as the reference's
     broadcast probe picks a prepared refiner per build geometry
     (rust/sedona-spatial-join/src/index/):
 
-    - box rows (``__parts`` NULL) take exact point-vs-box intervals:
+    - box rows (rects and points) take exact point-vs-box intervals:
       intersects/coveredby = closed box, within = open box, dwithin =
       clamp distance ≤ d;
-    - every other row takes the crossing-number / on-edge /
+    - under intersects, coveredby and within, every other row takes the
+      leaf refine (``leaf_refine``; ``_BuildSide.leaf_table``): the key
+      is a finer cell inside the coarse cells a boundary crosses, FULL
+      leaves match with no test, and EDGE leaves join a table of slots
+      and run a small lambda-free test above that join, so the whole
+      cell join stays in whole-stage codegen;
+    - a side the leaf refine cannot decompose, and ``dwithin``, refine
+      every other row with the crossing-number / on-edge /
       segment-distance higher-order-function refine over its edge
-      arrays, arithmetically identical to the numpy kernels.  CASE
-      branches are lazy, so the O(edges) lambda runs only there.
+      arrays (``_BuildSide.cell_table``), arithmetically identical to
+      the numpy kernels; behind the row's closed bbox, except under
+      ``dwithin``.
 
     mark/left_semi/left_anti/left run as JVM semi/anti joins on the same
-    broadcast table: still zero Python, no finisher shuffle."""
+    broadcast table, the whole refine in the join condition: still zero
+    Python, no finisher shuffle."""
     right_i = side.right_i
-    rcells = side.cell_table(res, pad)
     if left_lonlat is not None:
         px, py = left_lonlat
         l_cells = left
@@ -1845,37 +1876,74 @@ def _jvm_join(left: DataFrame, side: _BuildSide, predicate: str, distance,
         px, py = "__lon", "__lat"
         l_cells = (left.withColumn(px, st_x(F.col(left_geom)))
                        .withColumn(py, st_y(F.col(left_geom))))
-    l_cells = l_cells.withColumn("__cell",
-                                 F.expr(grid.cell_expr_sql(px, py, res)))
     plon, plat = F.col(px), F.col(py)
     x0, y0, x1, y1 = (F.col(c) for c in ("__x0", "__y0", "__x1", "__y1"))
-    if predicate == "dwithin":
-        # euclidean distance to the box via coordinate clamping; a
-        # probe-side per-row distance stays a column
-        dx = F.greatest(x0 - plon, plon - x1, F.lit(0.0))
-        dy = F.greatest(y0 - plat, plat - y1, F.lit(0.0))
-        if ldist_col is not None:
-            d, dexpr = F.col(ldist_col), ldist_col
+    closed = (plon >= x0) & (plon <= x1) & (plat >= y0) & (plat <= y1)
+    box = ((plon > x0) & (plon < x1) & (plat > y0) & (plat < y1)
+           if predicate == "within" else closed)
+    leaves = (side.leaf_table(res) if predicate in _LEAF_PREDICATES
+              else None)
+    if leaves is not None and leaves.reason is None:
+        # the coarse key is its own column: the CASE below reads it twice
+        l_cells = l_cells.withColumn(
+            "__ccell", F.expr(grid.cell_expr_sql(px, py, res)))
+        key = F.col("__ccell")
+        if leaves.refined:
+            key = F.when(key.isin(leaves.refined), F.expr(
+                grid.cell_expr_sql(px, py, leaves.fine_res))).otherwise(key)
+        l_cells = l_cells.withColumn("__cell", key)
+        kind = F.col("__kind")
+        cond = (F.when(kind == LR.BOX, box)
+                .when(kind == LR.FULL, F.lit(True)).otherwise(closed))
+        table, full = leaves.cells, cond
+        if leaves.slots is not None:
+            slot = F.expr(LR.slot_test_sql(px, py, leaves.max_edges,
+                                           leaves.max_toggles,
+                                           boundary=predicate != "within"))
+            full = F.when(kind == LR.EDGE, closed & slot).otherwise(cond)
+            table = table.join(leaves.slots, on="__slot", how="left")
+        if how in ("inner", "left"):
+            cand = l_cells.join(F.broadcast(leaves.cells),
+                                on="__cell").where(cond)
+            if leaves.slots is not None:
+                # the slot test filters ABOVE a left-outer slot join: on
+                # an inner join Catalyst would merge it into the cell
+                # join's condition, measured slower
+                cand = (cand.join(F.broadcast(leaves.slots), on="__slot",
+                                  how="left")
+                        .where((kind != LR.EDGE) | slot))
+    else:
+        l_cells = l_cells.withColumn(
+            "__cell", F.expr(grid.cell_expr_sql(px, py, res)))
+        table = side.cell_table(res, pad)
+        if predicate == "dwithin":
+            # euclidean distance to the box via coordinate clamping; a
+            # probe-side per-row distance stays a column (NaN as NULL)
+            dx = F.greatest(x0 - plon, plon - x1, F.lit(0.0))
+            dy = F.greatest(y0 - plat, plat - y1, F.lit(0.0))
+            if ldist_col is not None:
+                d = _distance(ldist_col)
+                dexpr = f"IF(isnan({ldist_col}), NULL, {ldist_col})"
+            elif np.isnan(distance):
+                d, dexpr = F.lit(None).cast("double"), "CAST(NULL AS DOUBLE)"
+            else:
+                d, dexpr = F.lit(float(distance)), repr(float(distance)) + "D"
+            box = F.sqrt(dx * dx + dy * dy) <= d
+            edges = F.expr(_dwithin_refine_sql(px, py, "__parts", dexpr))
         else:
-            d, dexpr = F.lit(float(distance)), repr(float(distance)) + "D"
-        box = F.sqrt(dx * dx + dy * dy) <= d
-        edges = _dwithin_refine_sql(px, py, "__parts", dexpr)
-    elif predicate == "within":
-        box = (plon > x0) & (plon < x1) & (plat > y0) & (plat < y1)
-        edges = _pip_refine_sql(px, py, "__parts", boundary=False)
-    else:  # intersects / coveredby ≡ boundary-inclusive
-        box = (plon >= x0) & (plon <= x1) & (plat >= y0) & (plat <= y1)
-        edges = _pip_refine_sql(px, py, "__parts", boundary=True)
-    cond = F.when(F.col("__parts").isNull(), box).otherwise(F.expr(edges))
+            edges = closed & F.expr(_pip_refine_sql(
+                px, py, "__parts", boundary=predicate != "within"))
+        full = cond = F.when(F.col("__parts").isNull(), box).otherwise(edges)
+        if how in ("inner", "left"):
+            cand = l_cells.join(F.broadcast(table), on="__cell").where(cond)
 
     if how in ("inner", "left"):
-        pairs = (l_cells.join(F.broadcast(rcells), on="__cell").where(cond)
-                 .join(F.broadcast(right_i), on="__ridx")
+        pairs = (cand.join(F.broadcast(right_i), on="__ridx")
                  .select(*left.columns, *rcols))
         if how == "inner":
             return pairs
-    rc = F.broadcast(rcells.withColumnRenamed("__cell", "__rcell"))
-    jcond = (F.col("__cell") == F.col("__rcell")) & cond
+    rc = F.broadcast(table.withColumnRenamed("__cell", "__rcell"))
+    jcond = (F.col("__cell") == F.col("__rcell")) & full
     if how in ("left_semi", "left_anti"):
         return l_cells.join(rc, jcond, how).select(*left.columns)
     anti = l_cells.join(rc, jcond, "left_anti").select(*left.columns)

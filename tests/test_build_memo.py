@@ -392,6 +392,55 @@ def test_jvm_cell_table_built_once(spark, monkeypatch):
     assert calls == {"table": 1, "rect": len(R)}
 
 
+def test_leaf_tables_built_once(spark, monkeypatch):
+    """Repeated lon/lat joins against one stable mixed rect + polygon
+    layer build the leaf refine's leaf and slot tables once, keep them in
+    the side's derived LRU, and weigh their bytes in the side's weight;
+    every join returns the brute-force pairs with no lambda in its plan."""
+    import numpy as np
+    from sedona_db_spark.sources.fixtures import regions_grid
+    LR = importlib.import_module("sedona_db_spark.operators.leaf_refine")
+    rpd = regions_grid(n_side=4, bounds=(-33.0, -17.0, 27.0, 23.0),
+                       metro_hotspots=3, seed=9)
+    regions = spark.createDataFrame(rpd)
+    R = [W.decode(bytes(g)) for g in rpd["geom"]]
+    rng = np.random.default_rng(9)
+    xy = rng.uniform((-35.0, -19.0), (29.0, 25.0), (300, 2))
+    pts = spark.createDataFrame(pd.DataFrame(
+        {"id": range(len(xy)), "lon": xy[:, 0], "lat": xy[:, 1]}))
+    exp = {(i, int(rpd["region_id"][j])) for i, j in _brute(
+        [("Point", p) for p in xy], R, K.geom_covered_by)}
+    calls = {"leaves": 0, "build": 0}
+    real_leaves, real_build = SJ._BuildSide._leaf_table, LR.build
+
+    def leaves(self, res):
+        calls["leaves"] += 1
+        return real_leaves(self, res)
+
+    def build(*a):
+        calls["build"] += 1
+        return real_build(*a)
+    monkeypatch.setattr(SJ._BuildSide, "_leaf_table", leaves)
+    monkeypatch.setattr(LR, "build", build)
+    tables = set()
+    for _ in range(3):
+        j = spatial_join(pts, regions, "coveredby",
+                         left_lonlat=("lon", "lat"), right_geom="geom")
+        assert {(r["id"], r["region_id"]) for r in j.collect()} == exp
+        assert "lambdafunction" not in \
+            j._jdf.queryExecution().executedPlan().toString()
+        side = next(reversed(SJ._BUILD_SIDES.values()))[1]
+        (key, (lv, nbytes)), = [(k, v) for k, v in side.derived.items()
+                                if k[0] == "leaves"]
+        assert lv.reason is None and lv.counts["edge"] > 0
+        tables.add((id(lv.cells), id(lv.slots)))
+    assert calls == {"leaves": 1, "build": 1}
+    assert len(tables) == 1
+    assert nbytes == lv.nbytes() > 0
+    assert side.weight() == side.nbytes + side.stored + sum(
+        b for _, b in side.derived.values())
+
+
 def test_side_structures_made_once_under_threads():
     """Threads sharing one build side make each derived structure once
     while it stays cached, keep the side's LRU within MAX_INDEXES, and

@@ -837,3 +837,51 @@ def test_byte_guard_post_collect_fallback(data, spark, monkeypatch):
     assert "__cell" in plan  # grid path, not the collected-index path
     got = {(r["id"], r["id_r"]) for r in j.collect()}
     assert got == base
+
+
+@pytest.mark.parametrize("bt", [200_000, 0])
+@pytest.mark.parametrize("probe_kind", ["lonlat", "wkb"])
+@pytest.mark.parametrize("side", ["probe", "build"])
+def test_dwithin_nan_distance_matches_nothing(spark, bt, probe_kind, side):
+    """A NaN distance matches nothing on every tier, as NULL does, and
+    leaves the pads of the other rows alone: a probe or build column with
+    one NaN row and finite rows still returns the finite rows' pairs."""
+    from pyspark.sql.types import (BinaryType, DoubleType, LongType,
+                                   StructField, StructType)
+    tri = ("Polygon", [np.array([(0, 0), (10, 0), (0, 10), (0, 0)], float)])
+    rect = ("Polygon", [np.array([(20, 0), (25, 0), (25, 5), (20, 5),
+                                  (20, 0)], float)])
+    G = [tri, rect]
+    nan = float("nan")
+    xy = [(1.0, 1.0), (21.0, 1.0), (26.0, 1.0), (12.0, 1.0)]
+    pdist = [nan, 0.5, 2.0, nan] if side == "probe" else [0.0] * 4
+    gdist = [nan, 1.5] if side == "build" else [0.0, 0.0]
+    P = [("Point", np.array(p)) for p in xy]
+    fields = [StructField("id", LongType()), StructField("pd", DoubleType())]
+    if probe_kind == "lonlat":
+        fields += [StructField("lon", DoubleType()),
+                   StructField("lat", DoubleType())]
+        rows = [(i, pdist[i], x, y) for i, (x, y) in enumerate(xy)]
+        kw = {"left_lonlat": ("lon", "lat")}
+    else:
+        fields.append(StructField("geom", BinaryType()))
+        rows = [(i, pdist[i], bytes(W.encode(p))) for i, p in enumerate(P)]
+        kw = {}
+    left = spark.createDataFrame(rows, StructType(fields))
+    right = spark.createDataFrame(
+        [(10 * (k + 1), gdist[k], bytes(W.encode(g))) for k, g in enumerate(G)],
+        "gid long, gd double, shape binary")
+    if side == "probe":
+        kw.update(distance="pd", distance_side="probe")
+    else:
+        kw.update(distance="gd")
+    got = {(r["id"], r["gid"]) for r in spatial_join(
+        left, right, "dwithin", right_geom="shape", broadcast_threshold=bt,
+        **kw).collect()}
+    exp = set()
+    for i, p in enumerate(P):
+        for k, g in enumerate(G):
+            d = pdist[i] if side == "probe" else gdist[k]
+            if not np.isnan(d) and K.geom_dwithin(p, g, d):
+                exp.add((i, 10 * (k + 1)))
+    assert exp and got == exp

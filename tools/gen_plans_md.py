@@ -47,8 +47,8 @@ def main():
     sections.append((
         "Strategy 1 — all-JVM conditional-refine join (rect layer)",
         "Cell keys are codegen expressions, the cell join is a "
-        "BroadcastHashJoin against the build side's cell table, and the "
-        "refine is one CASE: rect and point rows (no edge arrays) take "
+        "BroadcastHashJoin against the build side's leaf table, and the "
+        "refine is one CASE on each row's kind: rect and point rows take "
         "interval arithmetic in whole-stage codegen; no Python anywhere, "
         "and the big side never shuffles.",
         simple_plan(j1)))
@@ -58,12 +58,16 @@ def main():
     sections.append((
         "Strategy 1 — all-JVM conditional-refine join (polygon layer)",
         "The same tier on (Multi)Polygon/line/point rows up to 512 edges, "
-        "probe coordinates already JVM-visible: their cell-table rows "
-        "carry edge arrays, and the CASE's other branch runs the even-odd "
-        "crossing-number + on-edge refine (and dwithin's clamp-projection "
-        "segment distance) as a SQL higher-order function — "
-        "arithmetically identical to the numpy kernels, ZERO Python "
-        "operators anywhere in the plan.",
+        "probe coordinates already JVM-visible: the key takes a finer "
+        "cell inside the coarse cells a boundary crosses, leaves inside "
+        "a polygon match with no test (kind 1), and boundary leaves "
+        "(kind 2) join their slot in a LeftOuter BroadcastHashJoin and "
+        "run a lambda-free slot test in the Filter above it — "
+        "arithmetically identical to the numpy kernels, no lambda, ZERO "
+        "Python operators anywhere in the plan.  Layers the leaf refine "
+        "cannot decompose, and dwithin, run the crossing-number / on-edge "
+        "/ segment-distance refine as a SQL higher-order function over "
+        "edge arrays instead.",
         simple_plan(j2)))
 
     j2b = spatial_join(pts, polys, "intersects")
