@@ -176,11 +176,9 @@ def leaves(spark, n: int = 5) -> dict:
     synthetic pages with that layer, each counted per region and
     collected, and prints their median (after the untimed join whose
     plan it reads)."""
-    import importlib
-    from sedona_db_spark.operators import spatial_join
+    from sedona_db_spark.operators import memo, spatial_join
     from sedona_db_spark.sources.fixtures import regions_grid
     from sedona_db_spark.webtext import pages_to_points, synth_pages
-    SJ = importlib.import_module("sedona_db_spark.operators.spatial_join")
     regions = spark.createDataFrame(regions_grid(
         n_side=16, bounds=(-180.0, -90.0, 180.0, 90.0), metro_hotspots=8))
     pages = pages_to_points(synth_pages(spark, 4_000_000)).select(
@@ -197,7 +195,7 @@ def leaves(spark, n: int = 5) -> dict:
     cell_join = next((ln for ln in final.splitlines()
                       if "BroadcastHashJoin [__cell" in ln), "")
     out = {"cell_join_codegen": cell_join.lstrip(" :+-").startswith("*(")}
-    side = next(reversed(SJ._BUILD_SIDES.values()))[1]
+    side = next(reversed(memo._BUILD_SIDES.values()))[1]
     res = next(k[1] for k in side.derived if k[0] == "leaves")
     lv = side.leaf_table(res)
     out.update(res=res, fine_res=lv.fine_res, refined_cells=len(lv.refined),

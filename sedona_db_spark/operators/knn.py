@@ -533,7 +533,7 @@ def knn_join(
         # the length() aggregate evaluates the python-UDF geometry column,
         # so repeated knn_joins over identical frames would otherwise pay
         # an ArrowEvalPython stats job per side per call
-        from sedona_db_spark.operators.spatial_join import (
+        from sedona_db_spark.operators.memo import (
             _SEM_STATS_CACHE, _sem_cached)
 
         def compute():
@@ -633,7 +633,7 @@ def knn_join(
         res = _pick_res_by_occupancy(targets, tgeom, n_t, k,
                                      nonpoint=t_nonpoint_grid)
 
-    from sedona_db_spark.operators.spatial_join import _cell_udf
+    from sedona_db_spark.operators.cell_join import _cell_udf
     t_cell_fn = (_center_cell_udf(res) if t_nonpoint_grid
                  else _cell_udf(res))
     # pre-shuffle ONCE on the cogroup key: every round's cogroup reuses the

@@ -33,7 +33,7 @@ def spread_small_input(df: DataFrame, key_col: str,
     The partition count probe (``df.rdd`` plan translation, driver-only,
     no job) is memoized on the canonicalized plan — repeated calls over
     an identical frame pay it once per session."""
-    from sedona_db_spark.operators.spatial_join import (
+    from sedona_db_spark.operators.memo import (
         _SEM_STATS_CACHE, _sem_cached)
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism

@@ -23,6 +23,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from sedona_db_spark import grid
+from sedona_db_spark.operators.memo import _Memo
 from sedona_db_spark.textops import analysis as TA
 from sedona_db_spark.textops import dedup as TD
 from sedona_db_spark.textops import repetition as TR
@@ -69,19 +70,13 @@ CELL_RES = 4
 # (~100 ms of driver time per table per query).  The memo holds only the
 # unexecuted scan PLAN — the catalog-table analogue; every action still
 # reads the parquet files, nothing is precomputed or cached.
-_TABLE_PLANS: dict = {}
+_TABLE_PLANS = _Memo("table_plans")
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    key = (id(spark), sf_dir, name)
-    hit = _TABLE_PLANS.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if len(_TABLE_PLANS) > 256:
-        _TABLE_PLANS.clear()
-    _TABLE_PLANS[key] = (spark, df)
-    return df
+    return _TABLE_PLANS.session_cached(
+        spark, (sf_dir, name),
+        lambda: spark.read.parquet(f"{sf_dir}/{name}.parquet"))
 
 
 def doc_points(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -101,7 +101,7 @@ def raster_vector_join(tiles: DataFrame, vectors: DataFrame,
     tile side can be arbitrarily large — it is never shuffled or
     collected.
     """
-    from sedona_db_spark.operators.spatial_join import _is_axis_rect
+    from sedona_db_spark.operators.build_side import _is_axis_rect
 
     tx0, ty0, tx1, ty1 = raster_extent_cols(raster_col)
     t = (tiles.withColumn("__tx0", tx0).withColumn("__ty0", ty0)
@@ -171,7 +171,7 @@ def raster_vector_join(tiles: DataFrame, vectors: DataFrame,
         # tile-extent stats memoized on the canonicalized plan (see
         # spatial_join._sem_cached): repeated joins over the same tile
         # frame skip the stats job entirely
-        from sedona_db_spark.operators.spatial_join import (
+        from sedona_db_spark.operators.memo import (
             _SEM_STATS_CACHE, _sem_cached)
 
         def _tile_stats():

@@ -17,6 +17,8 @@ from pyspark.sql.types import (
     StructField, StructType,
 )
 
+from sedona_db_spark.operators.memo import _Memo
+
 BAND_METADATA_TYPE = StructType([
     StructField("nodatavalue", BinaryType()),
     StructField("storage_type", IntegerType()),
@@ -90,7 +92,7 @@ def make_tile(tile_id: int, ulx: float, uly: float, scale_x: float,
 # same arguments return the SAME local-relation DataFrame, so downstream
 # plan-keyed statistics memos hit and the tile rows ship to the JVM once
 # per session (the rows are a pure function of the arguments)
-_TILES_MEMO: dict = {}
+_TILES_MEMO = _Memo("tiles", max_entries=64)
 
 
 def make_tiles_df(spark: SparkSession, nx: int = 16, ny: int = 16,
@@ -103,23 +105,18 @@ def make_tiles_df(spark: SparkSession, nx: int = 16, ny: int = 16,
     ymax − j·th]; upper-left anchored, scale_y negative (north-up
     convention, matching the reference's geotransform model).
     """
-    key = (id(spark), nx, ny, tile_px, tuple(bounds), with_pixels)
-    hit = _TILES_MEMO.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    xmin, ymin, xmax, ymax = bounds
-    tw = (xmax - xmin) / nx
-    th = (ymax - ymin) / ny
-    rows = []
-    for j in range(ny):
-        for i in range(nx):
-            tid = j * nx + i
-            rows.append(make_tile(
-                tid, xmin + i * tw, ymax - j * th,
-                tw / tile_px, -th / tile_px, tile_px, tile_px,
-                with_pixels=with_pixels))
-    df = spark.createDataFrame(rows, schema=TILE_SCHEMA)
-    if len(_TILES_MEMO) > 64:
-        _TILES_MEMO.clear()
-    _TILES_MEMO[key] = (spark, df)
-    return df
+    def make():
+        xmin, ymin, xmax, ymax = bounds
+        tw = (xmax - xmin) / nx
+        th = (ymax - ymin) / ny
+        rows = []
+        for j in range(ny):
+            for i in range(nx):
+                tid = j * nx + i
+                rows.append(make_tile(
+                    tid, xmin + i * tw, ymax - j * th,
+                    tw / tile_px, -th / tile_px, tile_px, tile_px,
+                    with_pixels=with_pixels))
+        return spark.createDataFrame(rows, schema=TILE_SCHEMA)
+    return _TILES_MEMO.session_cached(
+        spark, (nx, ny, tile_px, tuple(bounds), with_pixels), make)

@@ -30,8 +30,8 @@ from sedona_db_spark.geometry import wkb as W
 from sedona_db_spark.operators import spatial_join
 from sedona_db_spark.sources import fixtures as FX
 
-# the package exports the function under the module's name
-SJ = importlib.import_module("sedona_db_spark.operators.spatial_join")
+SJ = importlib.import_module("sedona_db_spark.operators.memo")
+BS = importlib.import_module("sedona_db_spark.operators.build_side")
 
 THRESHOLDS = (200_000, 0)   # broadcast tier, cell join
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -161,6 +161,26 @@ def test_remote_file_sources_are_not_stable(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(type(build), "inputFiles", lambda self: [
         "hdfs://namenode" + urlparse(n).path for n in names])
     assert not SJ._stable_plan(build)
+
+
+@pytest.mark.parametrize("scheme", ["hdfs://namenode", "file:/gone"])
+def test_unfingerprinted_inputs_skip_statistics_memo(spark, tmp_path,
+                                                     monkeypatch, scheme):
+    """A file relation whose inputs the memo cannot fingerprint (off the
+    local file system, or a local path that no longer stats) has its
+    build statistics computed on every call."""
+    SPJ = importlib.import_module("sedona_db_spark.operators.spatial_join")
+    path = str(tmp_path / "stats")
+    spark.createDataFrame(_polys(4, seed=10)).write.parquet(path)
+    build = spark.read.parquet(path)
+    names = build.inputFiles()
+    monkeypatch.setattr(type(build), "inputFiles", lambda self: [
+        scheme + urlparse(n).path for n in names])
+    before = _counts("stats")
+    for _ in range(2):
+        assert SPJ._count_bytes_stats(build, "geom")[0] == 4
+    assert _counts("stats") == {"hit": before["hit"],
+                                "miss": before["miss"] + 2}
 
 
 def test_lost_checkpoint_is_rebuilt(spark, layer):
@@ -307,7 +327,7 @@ from sedona_db_spark import get_spark
 from sedona_db_spark.geometry import wkb as W
 from sedona_db_spark.operators import spatial_join
 import importlib
-SJ = importlib.import_module("sedona_db_spark.operators.spatial_join")
+SJ = importlib.import_module("sedona_db_spark.operators.memo")
 
 def frames(spark):
     sq = lambda a, b: W.wkt_to_wkb(
@@ -372,7 +392,7 @@ def test_jvm_cell_table_built_once(spark, monkeypatch):
     exp = {(i, int(rpd["region_id"][j])) for i, j in _brute(
         [("Point", p) for p in xy], R, K.geom_covered_by)}
     calls = {"table": 0, "rect": 0}
-    real_table, real_rect = SJ._BuildSide._cell_table, SJ._is_axis_rect
+    real_table, real_rect = BS._BuildSide._cell_table, BS._is_axis_rect
 
     def table(self, res, pad):
         calls["table"] += 1
@@ -381,8 +401,8 @@ def test_jvm_cell_table_built_once(spark, monkeypatch):
     def rect(g):
         calls["rect"] += 1
         return real_rect(g)
-    monkeypatch.setattr(SJ._BuildSide, "_cell_table", table)
-    monkeypatch.setattr(SJ, "_is_axis_rect", rect)
+    monkeypatch.setattr(BS._BuildSide, "_cell_table", table)
+    monkeypatch.setattr(BS, "_is_axis_rect", rect)
     for _ in range(3):
         j = spatial_join(pts, regions, "coveredby",
                          left_lonlat=("lon", "lat"), right_geom="geom")
@@ -411,7 +431,7 @@ def test_leaf_tables_built_once(spark, monkeypatch):
     exp = {(i, int(rpd["region_id"][j])) for i, j in _brute(
         [("Point", p) for p in xy], R, K.geom_covered_by)}
     calls = {"leaves": 0, "build": 0}
-    real_leaves, real_build = SJ._BuildSide._leaf_table, LR.build
+    real_leaves, real_build = BS._BuildSide._leaf_table, LR.build
 
     def leaves(self, res):
         calls["leaves"] += 1
@@ -420,7 +440,7 @@ def test_leaf_tables_built_once(spark, monkeypatch):
     def build(*a):
         calls["build"] += 1
         return real_build(*a)
-    monkeypatch.setattr(SJ._BuildSide, "_leaf_table", leaves)
+    monkeypatch.setattr(BS._BuildSide, "_leaf_table", leaves)
     monkeypatch.setattr(LR, "build", build)
     tables = set()
     for _ in range(3):
@@ -448,7 +468,7 @@ def test_side_structures_made_once_under_threads():
     import threading
     import time
     from collections import Counter, OrderedDict
-    side = object.__new__(SJ._BuildSide)
+    side = object.__new__(BS._BuildSide)
     side.nbytes, side.stored = 100, 0
     side.derived, side.lock = OrderedDict(), threading.Lock()
     made = Counter()
@@ -482,8 +502,8 @@ def test_side_structures_made_once_under_threads():
     assert side.weight() == 130
     for k in range(3, 10):
         side._derived(k, lambda: make(k))
-    assert len(side.derived) == SJ._BuildSide.MAX_INDEXES
-    assert side.weight() == 100 + 10 * SJ._BuildSide.MAX_INDEXES
+    assert len(side.derived) == BS._BuildSide.MAX_INDEXES
+    assert side.weight() == 100 + 10 * BS._BuildSide.MAX_INDEXES
 
 
 def test_memo_lru_eviction(monkeypatch):

@@ -22,7 +22,7 @@ from sedona_db_spark.geometry import wkb as W
 from sedona_db_spark.operators import spatial_join
 from sedona_db_spark.sources.fixtures import regions_grid
 
-SJ = importlib.import_module("sedona_db_spark.operators.spatial_join")
+SJ = importlib.import_module("sedona_db_spark.operators.memo")
 LR = importlib.import_module("sedona_db_spark.operators.leaf_refine")
 
 RES = 6                                   # coarse cells 5.625° x 2.8125°

@@ -599,8 +599,7 @@ def test_adaptive_covering_mixed_size_layer(spark):
     import numpy as np
     from sedona_db_spark.geometry import wkb as W
     from sedona_db_spark.geometry import kernels as K
-    from sedona_db_spark.operators.spatial_join import (
-        _covering_cells_adaptive_udf)
+    from sedona_db_spark.operators.cell_join import _cover_udf
 
     rng = np.random.default_rng(12)
     polys = []
@@ -626,7 +625,7 @@ def test_adaptive_covering_mixed_size_layer(spark):
     gdf = spark.createDataFrame([(i, bytes(b)) for i, b in polys], sch)
 
     # fanout bound: at a fine res the giant's adaptive covering is <= 64
-    cov = gdf.select(_covering_cells_adaptive_udf(10)(F.col("geom"))
+    cov = gdf.select(_cover_udf(10, max_cells=64)(F.col("geom"))
                      .alias("c")).collect()
     sizes = [len(r["c"]) for r in cov]
     assert max(sizes) <= 64  # fanout bounded for EVERY geometry
@@ -698,7 +697,7 @@ def test_auto_salt_hot_cell_collect_is_capped(spark):
     """The salt="auto" histogram must never collect more than MAX_HOT_CELLS
     rows: the hot filter + top-K limit run job-side (round-6 VERDICT #3)."""
     import pandas as pd
-    from sedona_db_spark.operators.spatial_join import _auto_hot_cells
+    from sedona_db_spark.operators.cell_join import _auto_hot_cells
     # 500 distinct cells, 10 of them 100x hotter than the rest
     rows = []
     for c in range(500):
@@ -827,8 +826,7 @@ def test_byte_guard_post_collect_fallback(data, spark, monkeypatch):
     build rows; the post-collect check must then route an over-budget
     build side to the grid path with identical results."""
     import importlib
-    SJ = importlib.import_module(
-        "sedona_db_spark.operators.spatial_join")
+    SJ = importlib.import_module("sedona_db_spark.operators.memo")
     pdf, gdf, P, G = data
     base = brute(P, G, K.geom_intersects)
     monkeypatch.setattr(SJ, "_BROADCAST_GEOM_BYTES", 64)  # force the raise
@@ -885,3 +883,99 @@ def test_dwithin_nan_distance_matches_nothing(spark, bt, probe_kind, side):
             if not np.isnan(d) and K.geom_dwithin(p, g, d):
                 exp.add((i, 10 * (k + 1)))
     assert exp and got == exp
+
+
+@pytest.mark.parametrize("bt", [200_000, 0])
+@pytest.mark.parametrize("pred,dist,fn", [
+    ("dwithin", 0.5, lambda p, g: K.geom_dwithin(p, g, 0.5)),
+    ("coveredby", None, K.geom_covered_by),
+])
+def test_lonlat_probe_without_geom_column(spark, bt, pred, dist, fn):
+    """A lon/lat probe with no geometry column, joined to a build side
+    whose geometry column has the probe's default name ``geom``: the cell
+    tier gives the probe a ``geom`` point column for its refine, so the
+    build's column must be named apart from it on every tier."""
+    import pandas as pd
+    xy = [(0.2, 0.3), (1.2, 0.5), (3.0, 3.0), (0.9, 1.4)]
+    probe = spark.createDataFrame(pd.DataFrame({
+        "id": [1, 2, 3, 4], "pd": [0.0] * 4,
+        "lon": [x for x, _ in xy], "lat": [y for _, y in xy]}))
+    G = [("Polygon", [np.array([(0, 0), (2, 0), (0, 2), (0, 0)], float)]),
+         ("Point", np.array([1.5, 0.5]))]
+    build = spark.createDataFrame(pd.DataFrame({
+        "bid": [10, 11], "geom": [W.encode(g) for g in G]}))
+    exp = {(i + 1, 10 + j) for i, j in brute(
+        [("Point", np.array(p)) for p in xy], G, fn)}
+    got = {(r["id"], r["bid"]) for r in spatial_join(
+        probe, build, pred, distance=dist, left_lonlat=("lon", "lat"),
+        broadcast_threshold=bt).collect()}
+    assert exp and got == exp
+
+
+def _planner_layers():
+    from test_leaf_refine import TOUCHING
+    n = 600
+    t = np.linspace(0.0, 2 * np.pi, n, endpoint=False)
+    ring = np.c_[10 + 4 * np.cos(t), 5 + 3 * np.sin(t)]
+    rects = FX.regions_grid(n_side=3, bounds=(0.0, 0.0, 20.0, 10.0),
+                            metro_hotspots=0)
+    mixed = FX.regions_grid(n_side=3, bounds=(0.0, 0.0, 20.0, 10.0),
+                            metro_hotspots=2, seed=5)
+    return {
+        "rects": [W.decode(bytes(g)) for g in rects["geom"]],
+        "mixed": [W.decode(bytes(g)) for g in mixed["geom"]],
+        "over_512_edges": [("Polygon", [np.r_[ring, ring[:1]]]),
+                           ("Polygon", [np.array([(1, 1), (3, 1), (3, 2),
+                                                  (1, 2), (1, 1)], float)])],
+        "touching_rings": TOUCHING,
+    }
+
+
+@pytest.mark.parametrize("pred", ["coveredby", "dwithin"])
+@pytest.mark.parametrize("bt", [200_000, 0])
+@pytest.mark.parametrize("layer", ["rects", "mixed", "over_512_edges",
+                                   "touching_rings"])
+@pytest.mark.parametrize("probe_kind", ["lonlat", "wkb_points",
+                                        "wkb_polygons"])
+def test_planner_tier_matches_executed_plan(spark, monkeypatch, probe_kind,
+                                            layer, bt, pred):
+    """The planner's tier is the one the executed plan shows (a
+    MapInPandas only on ``fused``, a lambda only on ``jvm_lambda``), each
+    faster tier it passed over carries a reason, and the pairs equal the
+    brute force."""
+    import importlib
+    import pandas as pd
+    SPJ = importlib.import_module("sedona_db_spark.operators.spatial_join")
+    plans = []
+    real = SPJ._plan_spatial_join
+    monkeypatch.setattr(SPJ, "_plan_spatial_join",
+                        lambda *a: plans.append(real(*a)) or plans[-1])
+    G = _planner_layers()[layer]
+    build = spark.createDataFrame(pd.DataFrame({
+        "bid": range(len(G)), "geom": [W.encode(g) for g in G]}))
+    if probe_kind == "wkb_polygons":
+        ppd = FX.random_polygons(15, seed=21, size=(0.3, 1.5),
+                                 bounds=(0.0, 0.0, 20.0, 10.0))
+        P = [W.decode(bytes(g)) for g in ppd["geometry"]]
+    else:
+        xy = np.random.default_rng(21).uniform((-1, -1), (21, 11), (60, 2))
+        P = [("Point", p) for p in xy]
+    cols = {"id": range(len(P))}
+    if probe_kind == "lonlat":
+        cols.update(lon=xy[:, 0], lat=xy[:, 1])
+    else:
+        cols.update(geom=[W.encode(p) for p in P])
+    kw = {"left_lonlat": ("lon", "lat")} if probe_kind == "lonlat" else {}
+    dist = 0.3 if pred == "dwithin" else None
+    j = spatial_join(spark.createDataFrame(pd.DataFrame(cols)), build, pred,
+                     distance=dist, broadcast_threshold=bt, **kw)
+    plan, = plans
+    executed = j._jdf.queryExecution().executedPlan().toString()
+    assert ("MapInPandas" in executed) == (plan.tier == "fused")
+    assert ("lambdafunction" in executed) == (plan.tier == "jvm_lambda")
+    faster = SPJ.TIERS[:SPJ.TIERS.index(plan.tier)]
+    assert [t for t, _ in plan.rejected] == list(faster)
+    assert all(isinstance(why, str) and why for _, why in plan.rejected)
+    fn = ((lambda p, g: K.geom_dwithin(p, g, 0.3)) if pred == "dwithin"
+          else K.geom_covered_by)
+    assert {(r["id"], r["bid"]) for r in j.collect()} == brute(P, G, fn)

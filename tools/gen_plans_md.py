@@ -5,29 +5,29 @@ physical strategies — what the optimizer actually does with our plans."""
 from __future__ import annotations
 
 import io
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
-def simple_plan(df) -> str:
+def simple_plan(df, max_lines: int | None = 40) -> str:
     s = df._jdf.queryExecution().executedPlan().toString()
     # strip codegen ids and column numbers for readability
     s = re.sub(r"#\d+[L]?", "", s)
     lines = [l.rstrip() for l in s.splitlines()]
-    return "\n".join(lines[:40])
+    return "\n".join(lines[:max_lines])
 
 
-def main():
+def sections(spark, plan=simple_plan) -> list:
+    """(title, blurb, plan text) of every PLANS.md section; ``plan(df)``
+    renders a DataFrame's executed plan."""
     from pyspark.sql import functions as F
-    from sedona_db_spark.session import get_spark
     from sedona_db_spark.sources.fixtures import random_points, random_polygons, regions_grid
     from sedona_db_spark.operators import spatial_join
     from sedona_db_spark.webtext import synth_pages, geocode_cols
-
-    spark = get_spark(master="local[4]", shuffle_partitions=4)
-    spark.sparkContext.setLogLevel("ERROR")
 
     pts = spark.createDataFrame(random_points(1000, seed=1)) \
         .withColumnRenamed("geometry", "geom")
@@ -40,22 +40,22 @@ def main():
     pages = (synth_pages(spark, 10_000).select("url")
              .withColumn("lon", lon).withColumn("lat", lat))
 
-    sections = []
+    out = []
 
     j1 = spatial_join(pages, rects, "coveredby", left_lonlat=("lon", "lat"),
                       right_geom="geom")
-    sections.append((
+    out.append((
         "Strategy 1 — all-JVM conditional-refine join (rect layer)",
         "Cell keys are codegen expressions, the cell join is a "
         "BroadcastHashJoin against the build side's leaf table, and the "
         "refine is one CASE on each row's kind: rect and point rows take "
         "interval arithmetic in whole-stage codegen; no Python anywhere, "
         "and the big side never shuffles.",
-        simple_plan(j1)))
+        plan(j1)))
 
     j2 = spatial_join(pages, polys, "coveredby", left_lonlat=("lon", "lat"),
                       right_geom="geom")
-    sections.append((
+    out.append((
         "Strategy 1 — all-JVM conditional-refine join (polygon layer)",
         "The same tier on (Multi)Polygon/line/point rows up to 512 edges, "
         "probe coordinates already JVM-visible: the key takes a finer "
@@ -68,10 +68,10 @@ def main():
         "cannot decompose, and dwithin, run the crossing-number / on-edge "
         "/ segment-distance refine as a SQL higher-order function over "
         "edge arrays instead.",
-        simple_plan(j2)))
+        plan(j2)))
 
     j2b = spatial_join(pts, polys, "intersects")
-    sections.append((
+    out.append((
         "Strategy 2 — one-pass broadcast mapInPandas (WKB probe or high-vertex layer)",
         "WKB probe columns (and layers beyond the 512-edge HOF cap): one "
         "MapInPandas over the big side — decode + refine fused in a single "
@@ -81,22 +81,22 @@ def main():
         "ArrowEvalPython for the HOF refine: matches-only output crosses "
         "the Python boundary instead of every probe row. No shuffle of "
         "the big side.",
-        simple_plan(j2b)))
+        plan(j2b)))
 
     j3 = spatial_join(pts, polys, "intersects", broadcast_threshold=0)
-    sections.append((
+    out.append((
         "Strategy 3 — shuffle cell join + vectorized refine (both sides large)",
         "Covering cells exploded on the build side, SortMergeJoin/"
         "ShuffledHashJoin on the cell key under AQE, exact-predicate "
         "ArrowEvalPython refine. salt='auto' adds hot-cell replication.",
-        simple_plan(j3)))
+        plan(j3)))
 
     j4 = spatial_join(pts, polys, "touches")
-    sections.append((
+    out.append((
         "Relation-predicate join (touches/crosses/overlaps/relate)",
         "Same partition-refine skeleton: broadcast cell join, DE-9IM "
         "kernel refine (ArrowEvalPython over candidate pairs only).",
-        simple_plan(j4)))
+        plan(j4)))
 
     import pandas as pd_
     import numpy as np_
@@ -108,7 +108,7 @@ def main():
     ptsg = (pages.limit(5000))
     j5 = spatial_join(ptsg, cities, "dwithin_sphere", distance=500_000.0,
                       left_lonlat=("lon", "lat"))
-    sections.append((
+    out.append((
         "Geography dwithin join (spherical caps + haversine refine)",
         "Build side covers its exact spherical-cap bbox (pole/antimeridian "
         "aware); round 3 extended this to ANY build geometry (lines/"
@@ -120,7 +120,7 @@ def main():
         "rejoined JVM-side. Non-point probe sides route through the "
         "generic cell join with row-identity dedup (sphere covers are "
         "padded, so the min-common-cell rule does not apply).",
-        simple_plan(j5)))
+        plan(j5)))
 
     from sedona_db_spark.raster.model import make_tiles_df
     from sedona_db_spark.raster.join import raster_vector_join
@@ -137,7 +137,7 @@ def main():
     rects6 = spark.createDataFrame(_pd.DataFrame(
         rect_rows, columns=["rid", "geom"]))
     jr = raster_vector_join(tiles, rects6)
-    sections.append((
+    out.append((
         "Raster↔vector lookup join (covering cells, zero Python)",
         "Round 3 replaced the tile×rect `crossJoin` + pandas "
         "`rs_intersects` filter (round-2 VERDICT \"What's wrong\" #1) with "
@@ -152,24 +152,24 @@ def main():
         "over candidate pairs only.  The tile side is never shuffled or "
         "collected — at 100 TB of imagery this is a map-side explode + two "
         "BroadcastHashJoins.",
-        simple_plan(jr)))
+        plan(jr)))
 
     j6 = spatial_join(pages.limit(5000), rects, "coveredby", "mark",
                       left_lonlat=("lon", "lat"))
-    sections.append((
+    out.append((
         "Mark join (correlated EXISTS)",
         "The matched set folds back onto the outer side with null-safe "
         "keyed equality; output is the outer rows + a boolean mark column.",
-        simple_plan(j6)))
+        plan(j6)))
 
     from sedona_db_spark.textops.dedup import simhash_neardup_pairs
     docs = spark.createDataFrame(pd_.DataFrame({
         "doc_id": range(200),
         "text": [f"alpha beta w{i % 37} x{i % 11}" for i in range(200)]}))
     j7 = simhash_neardup_pairs(docs)
-    plan7 = simple_plan(j7)
+    plan7 = plan(j7)
     n_subtrees = plan7.count("length(__tok")
-    sections.append((
+    out.append((
         "SimHash near-dup — all-JVM signature, single-pass banding",
         "Tokens explode JVM-side (md5-prefix 60-bit hash, 60 map-combinable "
         "SUMs); stack() emits every band key in one generator pass, so the "
@@ -182,13 +182,13 @@ def main():
     with tempfile.TemporaryDirectory() as td:
         write_geo(pts, td + "/pts", res=7, files=4)
         q = read_geo(spark, td + "/pts").where(bbox_filter(-3, -3, 3, 3))
-        plan = q._jdf.queryExecution().toString()
-        pushed = [l for l in plan.splitlines() if "PushedFilters" in l]
-        sections.append((
+        text = q._jdf.queryExecution().toString()
+        pushed = [l for l in text.splitlines() if "PushedFilters" in l]
+        out.append((
             "Storage pruning — bbox covering columns reach the parquet scan",
             "Cell-sorted writes + plain comparison predicates: Catalyst "
             "pushes them into the scan (file + row-group min/max pruning).",
-            "\n".join(pushed)[:800] or plan[:800]))
+            "\n".join(pushed)[:800] or text[:800]))
 
     from sedona_db_spark.sources.geostore import (
         write_geoparquet, read_geoparquet, covering_bbox_filter)
@@ -196,22 +196,28 @@ def main():
         write_geoparquet(pts, td + "/gp", res=7)
         dfgp, geo = read_geoparquet(spark, td + "/gp")
         q = dfgp.where(covering_bbox_filter(geo, -3, -3, 3, 3))
-        plan = q._jdf.queryExecution().toString()
-        pushed = [l for l in plan.splitlines() if "PushedFilters" in l]
-        sections.append((
+        text = q._jdf.queryExecution().toString()
+        pushed = [l for l in text.splitlines() if "PushedFilters" in l]
+        out.append((
             "GeoParquet 1.1 covering struct — field stats prune row groups",
             "The spec covering.bbox struct fields behave like plain "
             "columns: comparisons push into the scan, so files written for "
             "external tools keep our pruning too.",
-            "\n".join(pushed)[:800] or plan[:800]))
+            "\n".join(pushed)[:800] or text[:800]))
+    return out
 
-    with open("/root/repo/PLANS.md", "w") as f:
+
+def main():
+    from sedona_db_spark.session import get_spark
+    spark = get_spark(master="local[4]", shuffle_partitions=4)
+    spark.sparkContext.setLogLevel("ERROR")
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("# PLANS — physical-plan evidence\n\n")
         f.write("Generated by `tools/gen_plans_md.py` (column ids stripped). "
                 "The point: every spatial operator compiles to plans the "
                 "Catalyst optimizer owns — broadcasts, AQE, codegen, "
                 "pushdown — with Python only where geometry kernels run.\n")
-        for title, blurb, plan in sections:
+        for title, blurb, plan in sections(spark):
             f.write(f"\n## {title}\n\n{blurb}\n\n```\n{plan}\n```\n")
     print("PLANS.md written")
 
