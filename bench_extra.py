@@ -11,9 +11,11 @@ bench — bench.py stays frozen.  Modes:
                                            # probes against one layer, and
                                            # N lon/lat joins against the
                                            # 264-region mixed layer
-  python bench_extra.py leaves [N]         # the 264-region world layer's
-                                           # leaf table, and the median of
-                                           # N 4M-page coveredby joins
+  python bench_extra.py leaves [N [PRED [D]]]  # the 264-region world
+                                           # layer's leaf table, and the
+                                           # median of N 4M-page joins
+                                           # (coveredby, or PRED with
+                                           # distance D: leaves 9 dwithin 0.5)
 
 Reads $SPARK_GRAFT_SF_DIR / $SPARK_GRAFT_CPUS like bench.py.
 """
@@ -164,18 +166,19 @@ def rejoin(spark, n: int = 6):
                 "pip_construct_s": round(t4 - t3, 3)}), flush=True)
 
 
-def leaves(spark, n: int = 5) -> dict:
+def leaves(spark, n: int = 5, predicate: str = "coveredby",
+           distance: float | None = None) -> dict:
     """The all-JVM tier's leaf refine on ``pages_pip``'s layer: the
     264-region world layer of 256 rects and 8 metro 12-gons.
 
     Prints the coarse join resolution and the fine leaf level, the
-    refined coarse cells, the leaf rows by kind, the most local edges and
-    toggles in any EDGE leaf, whether the side fell back to the lambda
-    refine (and why), and whether the cell join runs in whole-stage
-    codegen.  Then times ``n`` warm lon/lat ``coveredby`` joins of 4M
-    synthetic pages with that layer, each counted per region and
-    collected, and prints their median (after the untimed join whose
-    plan it reads)."""
+    refined coarse cells, the leaf rows by kind, the most edges and
+    toggles in any EDGE leaf, whether the side could not be decomposed
+    (and why), and whether the cell join runs in whole-stage codegen.
+    Then times ``n`` warm lon/lat ``predicate`` joins (``distance`` for
+    dwithin) of 4M synthetic pages with that layer, each counted per
+    region and collected, and prints their median (after the untimed
+    join whose plan it reads)."""
     from sedona_db_spark.operators import memo, spatial_join
     from sedona_db_spark.sources.fixtures import regions_grid
     from sedona_db_spark.webtext import pages_to_points, synth_pages
@@ -185,7 +188,7 @@ def leaves(spark, n: int = 5) -> dict:
         "url", "lon", "lat", "geom")
 
     def join():
-        df = spatial_join(pages, regions, "coveredby",
+        df = spatial_join(pages, regions, predicate, distance=distance,
                           left_lonlat=("lon", "lat"), right_geom="geom"
                           ).groupBy("region_id").count()
         df.collect()
@@ -196,8 +199,9 @@ def leaves(spark, n: int = 5) -> dict:
                       if "BroadcastHashJoin [__cell" in ln), "")
     out = {"cell_join_codegen": cell_join.lstrip(" :+-").startswith("*(")}
     side = next(reversed(memo._BUILD_SIDES.values()))[1]
-    res = next(k[1] for k in side.derived if k[0] == "leaves")
-    lv = side.leaf_table(res)
+    key = next(k for k in side.derived if k[0] == "leaves")
+    res = key[1]
+    lv = side.leaf_table(*key[1:])
     out.update(res=res, fine_res=lv.fine_res, refined_cells=len(lv.refined),
                leaves=lv.counts, max_edges=lv.max_edges,
                max_toggles=lv.max_toggles, fell_back=lv.reason is not None,
@@ -229,7 +233,9 @@ def main():
         return
     if mode == "leaves":
         spark = get_session()
-        print(json.dumps(leaves(spark, int(names[0]) if names else 5)))
+        print(json.dumps(leaves(spark, int(names[0]) if names else 5,
+                                *names[1:2],
+                                *[float(v) for v in names[2:3]])))
         spark.stop()
         return
 

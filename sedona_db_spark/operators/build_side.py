@@ -18,13 +18,12 @@ from sedona_db_spark.geometry import kernels as K
 from sedona_db_spark.geometry import wkb as W
 from sedona_db_spark.geometry.algos import EARTH_RADIUS_M
 from sedona_db_spark.operators import leaf_refine as LR
-from sedona_db_spark.operators.jvm_join import _CELL_TABLE, _geom_edge_parts
 
 _NO_CELLS = np.empty(0, dtype=np.int64)
 
 MAX_JVM_POLY_EDGES = 512  # per build geometry; beyond this the numpy
                           # batch-vectorized refine amortizes better
-# build geometry types the all-JVM tier refines over edge arrays
+# build geometry types the all-JVM tier refines
 _JVM_TYPES = ("Point", "MultiPoint", "LineString", "MultiLineString",
               "Polygon", "MultiPolygon")
 
@@ -141,8 +140,8 @@ class _BuildSide:
     with ``__ridx``, the rows' ids, WKBs and per-row pads and their WKB
     byte total, the checkpoint's stored bytes and, decoded on first use,
     the rows' geometries, bboxes, mean bbox extent and shapes for the
-    all-JVM tier, and the cell index broadcasts and JVM cell and leaf
-    tables built from them so far.  A side over the byte budget is never
+    all-JVM tier, and the cell index broadcasts and leaf tables built
+    from them so far.  A side over the byte budget is never
     decoded: the planner rejects it by ``nbytes``."""
 
     MAX_INDEXES = 4
@@ -176,8 +175,7 @@ class _BuildSide:
             self.pads = np.array([np.nan if r[dist_col] is None
                                   else float(r[dist_col]) for r in rows],
                                  dtype=np.float64)
-        # cell indexes with their broadcasts, and JVM cell and leaf
-        # tables (a leaf table is made from the cell rows: reentrant)
+        # cell indexes with their broadcasts, and leaf tables
         self.derived: OrderedDict = OrderedDict()
         self.lock = threading.RLock()
 
@@ -229,7 +227,7 @@ class _BuildSide:
 
     def weight(self) -> int:
         """Bytes this side holds: its WKB on the driver, its checkpoint on
-        the executors and its cached JVM cell and leaf tables."""
+        the executors and its cached leaf tables."""
         with self.lock:
             return (self.nbytes + self.stored
                     + sum(b for _, b in self.derived.values()))
@@ -268,38 +266,26 @@ class _BuildSide:
                               and _edge_count(g) <= MAX_JVM_POLY_EDGES)
                 else "other" for g in self.geoms]
 
-    def cell_rows(self, res: int, pad: float) -> pd.DataFrame:
-        """The all-JVM tier's cell rows at ``res``, made on first use: one
-        row per (covering cell, build row) with the row's position, id,
-        bbox ``__x0..__y1`` and, unless the row is a box, its edge arrays
-        ``__parts``.  Rects and points are boxes: a point is the
-        degenerate box [x,x]×[y,y], whose clamp distance IS the point
-        distance and whose closed box IS coordinate equality (the tier
-        takes points only where that holds: lon/lat probes, not
-        ``within``)."""
-        return self._derived(("cells", res, pad),
-                             lambda: self._cell_table(res, pad))
-
-    def cell_table(self, res: int, pad: float) -> DataFrame:
-        """The cell rows as a broadcastable table, refined by the lambda
-        refine.  Built from pandas, so it plans as a LocalRelation."""
-        def make():
-            pdf = self.cell_rows(res, pad)[[f.name for f in _CELL_TABLE]]
-            spark = self.right_i.sparkSession
-            return spark.createDataFrame(pdf, _CELL_TABLE), 0
-        return self._derived(("cell_table", res, pad), make)
-
-    def leaf_table(self, res: int) -> LR.Leaves:
+    def leaf_table(self, res: int, *dw) -> LR.Leaves:
         """The leaf refine's tables at ``res`` (``leaf_refine``), made on
-        first use from the cell rows: ``cells`` (kind, bbox and slot id
-        per leaf and build row) and ``slots`` (each EDGE slot's values),
-        or the reason the side keeps the lambda refine."""
-        return self._derived(("leaves", res), lambda: self._leaf_table(res))
+        first use from the cell rows (``_cell_table``): ``cells`` (kind,
+        bbox and slot id per leaf and build row) and ``slots`` (each EDGE
+        slot's values), or the reason the side cannot be decomposed.
+        Under dwithin ``dw`` is (pad, dmin): the leaves are cut from the
+        cell rows at the pad and carry distance bounds.  Rects and points
+        are boxes: a point is the degenerate box [x,x]×[y,y], whose clamp
+        distance IS the point distance and whose closed box IS coordinate
+        equality (the tier takes points only where that holds: lon/lat
+        probes, not ``within``)."""
+        return self._derived(("leaves", res, *dw),
+                             lambda: self._leaf_table(res, *dw))
 
-    def _leaf_table(self, res: int) -> tuple:
+    def _leaf_table(self, res: int, *dw) -> tuple:
         boxes = {pos for pos, shape in enumerate(self.shapes)
                  if shape in ("rect", "Point")}
-        leaves = LR.build(self.cell_rows(res, 0.0), self.geoms, boxes, res)
+        pad = dw[0] if dw else 0.0
+        leaves = LR.build(self._cell_table(res, pad), self.geoms, boxes, res,
+                          dw or None)
         spark = self.right_i.sparkSession
         if leaves.reason is None:
             leaves.cells = spark.createDataFrame(leaves.cell_rows)
@@ -307,25 +293,19 @@ class _BuildSide:
             leaves.slots = spark.createDataFrame(leaves.slot_rows)
         return leaves, leaves.nbytes()
 
-    def _cell_table(self, res: int, pad: float) -> tuple:
-        rows, nbytes = [], 0
-        for pos, shape in enumerate(self.shapes):
-            cells = cover_cells(self.geoms[pos], res, pad)
+    def _cell_table(self, res: int, pad: float) -> pd.DataFrame:
+        """One row per (cell of the bbox padded by ``pad``, build row)
+        with the row's position, id and bbox ``__x0..__y1``."""
+        rows = []
+        for pos, g in enumerate(self.geoms):
+            cells = cover_cells(g, res, pad)
             if not len(cells):          # NULL or empty geometry
                 continue
             x0, y0, x1, y1 = self.bbox[pos]
-            box = shape in ("rect", "Point")
-            parts = None if box else _geom_edge_parts(self.geoms[pos])
-            # each edge sits twice per cell row (in its ring's array and
-            # in ``edges``), 4 doubles each
-            nbytes += len(cells) * (48 + (0 if box else 64 * _edge_count(
-                self.geoms[pos])))
             rid = int(self.ids[pos])
-            rows.extend((int(c), rid, x0, y0, x1, y1, parts, pos)
-                        for c in cells)
-        pdf = pd.DataFrame(rows, columns=[f.name for f in _CELL_TABLE.fields]
-                           + ["__pos"])
-        return pdf, nbytes
+            rows.extend((int(c), rid, x0, y0, x1, y1, pos) for c in cells)
+        return pd.DataFrame(rows, columns=["__cell", "__ridx", "__x0", "__y0",
+                                           "__x1", "__y1", "__pos"])
 
     def _cell_index(self, res, pad, sphere, d_cov) -> tuple:
         pads = self.pads

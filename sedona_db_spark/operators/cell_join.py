@@ -251,7 +251,8 @@ def _refine_condition(plan):
 def _cell_join(left: DataFrame, plan):
     """The cell tier: the matched pairs of an inner join at ``plan.res``,
     with the probe and build frames their columns come from (a lon/lat
-    probe gains its point geometry column for the refine)."""
+    probe without its geometry column refines against its point, which
+    the output leaves out)."""
     right, res, pad, predicate = plan.right, plan.res, plan.pad, plan.predicate
     left_geom, rgeom, exploded = plan.left_geom, plan.rgeom, plan.probe_exploded
     lcols, rcols = list(left.columns), list(right.columns)
@@ -331,15 +332,16 @@ def _cell_join(left: DataFrame, plan):
         # raw lon/lat: the cell key is a pure JVM expression (codegen, no
         # Python round-trip); same formula as grid.cell_expr_sql oracles
         lon_c, lat_c = plan.left_lonlat
+        probe = left
         if left_geom not in left.columns:
             from sedona_db_spark.functions.scalar import st_point
-            left = left.withColumn(left_geom, st_point(F.col(lon_c), F.col(lat_c)))
-            lcols = list(left.columns)
+            probe = left.withColumn(left_geom,
+                                    st_point(F.col(lon_c), F.col(lat_c)))
         if len(levels) == 1:
-            l_cells = left.withColumn(
+            l_cells = probe.withColumn(
                 "__cell", F.expr(grid.cell_expr_sql(lon_c, lat_c, levels[0])))
         else:
-            l_cells = left.withColumn("__cell", F.explode(F.array(*[
+            l_cells = probe.withColumn("__cell", F.explode(F.array(*[
                 F.expr(grid.cell_expr_sql(lon_c, lat_c, lv))
                 for lv in levels])))
     elif len(levels) == 1:

@@ -1,8 +1,8 @@
-"""Exact, lambda-free point-in-polygon for the all-JVM broadcast tier.
+"""Exact, lambda-free refine for the all-JVM broadcast tier.
 
-The all-JVM tier (``spatial_join._jvm_join``) joins a lon/lat probe's
-grid cell to a broadcast table of build rows.  Refining a polygon row
-with ``exists``/``aggregate`` lambdas over its edge arrays keeps the
+The all-JVM tier (``jvm_join._jvm_join``) joins a lon/lat probe's grid
+cell to a broadcast table of build rows.  Refining a polygon row per
+probe with higher-order functions over its edge arrays would keep the
 whole cell join out of whole-stage codegen (lambdas are
 ``CodegenFallback`` in Spark), although only a small share of the
 candidates sit near an edge.  This module sorts every (cell, build row)
@@ -16,9 +16,10 @@ pair on the driver instead, as Raster Intervals (SIGMOD 2023) and Cabin
   coarse index times 2^s plus the offset, as multiplying by 2^res is
   exact in IEEE doubles);
 - each (leaf, build row) pair is BOX (rects and points: the interval
-  test), FULL (every probe that lands in the leaf matches), EDGE (a slot
-  test over at most ``LEAF_EDGES`` local edges and ``LEAF_TOGGLES``
-  toggles) or dropped (no probe that lands in the leaf matches).
+  test, or the clamp distance under ``dwithin``), FULL (every probe that
+  lands in the leaf matches), EDGE (a slot test over at most
+  ``LEAF_EDGES`` edges and ``LEAF_TOGGLES`` toggles) or dropped (no probe
+  that lands in the leaf matches).
 
 Why the slot test equals ``kernels.points_in_geom`` bit for bit, for a
 probe p that lands in a leaf [X0, X1] x [Y0, Y1] (the cell assignment
@@ -45,12 +46,38 @@ A leaf whose rings other than one are all constant reduces to that
 ring's parity bit ``v`` and an on-edge bit: its row matches when
 ``on OR T[v]`` (intersects, coveredby) or ``NOT on AND T[v]`` (within),
 with ``T`` a 2-entry truth table over the polygon's parts and holes.
+Rings that stay more than 2m apart are nested or apart, so a probe lies
+in one of them and the rings around it, and is within ulps of at most
+one: when the polygon test is a function of the parity over all the
+leaf's rings on those sets, ``v`` is that parity.
 
-A side keeps the lambda refine when it cannot be decomposed: a non-box
-row in a coarse cell on the grid border (probes outside the world clamp
-there), two rings with edges in one finest leaf (touching rings), or a
-leaf that still needs more than ``LEAF_EDGES`` local edges or
-``LEAF_TOGGLES`` toggles at the finest level ``res + MAX_LEAF_SPLIT``.
+Under ``dwithin`` (``kernels.geom_dwithin``) the leaves are cut from the
+cell rows at the pad, the largest distance a probe carries.  A non-box
+pair holds bounds on the kernel's distance of any probe in its leaf,
+widened by m: ``lo`` (0 where the leaf meets the polygon, else the
+distance to the nearest edge's bbox) and ``hi`` (0 inside the polygon,
+else the smallest over edges of the largest corner distance: a
+segment's distance is convex).  It is dropped when ``lo`` exceeds the
+pad, FULL when ``hi`` is at most the smallest distance that can match
+(a literal distance, or 0 for a probe column), and otherwise matches
+when ``d >= hi``, or behind the kernel's bbox prefilter when ``d >= lo``
+and its slot holds: ``(d >= 0 AND inside) OR`` some slot edge within d,
+clamp then ``hypot`` as the kernel.  Its slot edges are every edge
+within pad + m that holds a probe's smallest distance somewhere in the
+leaf (``_Shape._near``).
+
+Probes outside the world (or with a NaN coordinate) clamp into the
+grid-border cells; a pair there also takes the row's bbox test (the
+kernel's prefilter under dwithin), which such a probe fails while the
+row's bbox, padded by pad + m under dwithin, lies inside the world.
+
+The split level is the smallest whose leaves fit ``LEAF_EDGES`` edges
+and ``LEAF_TOGGLES`` toggles; a side no level fits takes the finest with
+slots as wide as its widest leaf.  A side cannot be decomposed
+(``Leaves.reason``: the planner passes the all-JVM tier over) with a
+non-finite coordinate, a bbox past the world, touching rings (two rings
+within 2m of each other in a finest leaf), or a finest leaf past
+``_WIDE_EDGES`` edges or ``_WIDE_TOGGLES`` toggles.
 """
 
 from __future__ import annotations
@@ -59,85 +86,124 @@ import numpy as np
 import pandas as pd
 
 from sedona_db_spark import grid
+from sedona_db_spark.geometry import kernels as K
 
 # The slot test's size is fixed: its generated code stays small enough
 # for the JIT (eight edges and five toggles at res 5 measured 20x slower).
 LEAF_EDGES = 2          # local edges per EDGE leaf
 LEAF_TOGGLES = 4        # right-side toggles per EDGE leaf
 MAX_LEAF_SPLIT = 4      # the finest leaf level is res + MAX_LEAF_SPLIT
+# a side no level fits in that budget takes its finest level with slots
+# up to this wide: slower, but still in the JVM and exact
+_WIDE_EDGES, _WIDE_TOGGLES = 32, 16
 _MAX_FINE_CELLS = 1 << 19  # refined coarse cells x 4^split
 # relative to a row's largest coordinate (at least 360): millions of
 # times the rounding error of the cell assignment and of the kernel's
 # x intercept, and far below any leaf's size
 _MARGIN = 1e-9
 
-BOX, FULL, EDGE = 0, 1, 2
-# the leaf table's columns the cell join reads
+# BBOX: a FULL pair in a grid-border cell, which matches behind the
+# row's bbox test
+BOX, FULL, EDGE, BBOX = 0, 1, 2, 3
+# the leaf table's columns the cell join reads, and under dwithin the
+# distance bounds
 CELL_COLS = ("__cell", "__ridx", "__kind", "__x0", "__y0", "__x1", "__y1",
              "__slot")
+DIST_COLS = ("__dlo", "__dhi")
 _EDGE_COLS = ("ax", "ay", "by", "dx", "dy", "mnx", "mxx", "mny", "mxy", "tol")
-# an unused edge slot never toggles (ay = by) and holds no probe
+# an unused edge slot never toggles (ay = by) and holds no probe; under
+# dwithin (two more columns, ``ll`` and ``z``) it lies at infinity
 _NO_EDGE = (0.0, 0.0, 0.0, 0.0, 0.0, np.inf, -np.inf, np.inf, -np.inf, 0.0)
+_NO_NEAR = (np.inf,) + _NO_EDGE[1:] + (1.0, np.inf)
+# sample grids (per side) that pick a dwithin leaf's near edges
+_SAMPLES = (8, 32, 128)
 
 
-def ring_edges(ring) -> list:
-    """[(ax, ay, bx, by), ...] — consecutive edges plus the closing edge
-    when the ring isn't explicitly closed (the numpy kernel's edge set:
-    points_in_ring / _points_on_ring_edge)."""
-    r = np.asarray(ring, dtype=np.float64)
-    if len(r) < 2:
-        return []
-    out = path_edges(r)
-    if not (r[0, 0] == r[-1, 0] and r[0, 1] == r[-1, 1]):
-        out.append((float(r[-1, 0]), float(r[-1, 1]),
-                    float(r[0, 0]), float(r[0, 1])))
-    return out
+def _seg_dist(px, py, e: np.ndarray) -> np.ndarray:
+    """Distances from points to the edges ``e`` (E, 4) along the last
+    axis, in the kernel's arithmetic (``kernels.points_seg_dist``; a
+    zero-length edge is its point)."""
+    ax, ay, bx, by = e.T
+    dx, dy = bx - ax, by - ay
+    ll = dx * dx + dy * dy
+    t = np.clip(((px - ax) * dx + (py - ay) * dy) / np.where(ll > 0, ll, 1.0),
+                0.0, 1.0)
+    return np.hypot(px - (ax + t * dx), py - (ay + t * dy))
 
 
-def path_edges(line) -> list:
-    """Consecutive edges only — NO implicit closing edge (a point on the
-    first-to-last chord of an open linestring must not test on-edge; the
-    kernel's _points_on_path_edge)."""
-    r = np.asarray(line, dtype=np.float64)
-    return [(float(r[i, 0]), float(r[i, 1]),
-             float(r[i + 1, 0]), float(r[i + 1, 1]))
-            for i in range(len(r) - 1)]
+def _fold(xy, cyclic: bool) -> tuple:
+    """The kernel's edges through the vertices ``xy`` (closed by i -> i+1
+    mod n when ``cyclic``) as an (E, 4) array without the zero-length
+    ones unless all are, and per edge whether a zero-length edge at its
+    start was folded into it.  A zero-length edge never toggles, a probe
+    on it is on the next edge too (whose cross product there is exactly
+    0), and its distance is the next edge's start's point distance."""
+    r = np.asarray(xy, dtype=np.float64).reshape(-1, 2)
+    e = np.c_[r, np.roll(r, -1, axis=0)] if cyclic else np.c_[r[:-1], r[1:]]
+    zero = (e[:, 0] == e[:, 2]) & (e[:, 1] == e[:, 3])
+    vertex = np.zeros(len(e), dtype=bool)
+    if zero.all():
+        return e, vertex
+    for i in np.flatnonzero(zero):
+        nxt = [j % len(e) for j in range(i + 1, len(e) + i * cyclic)
+               if not zero[j % len(e)]]
+        vertex[nxt[:1]] = True
+        zero[i] = bool(nxt)         # a line's repeated last vertex stays
+    return e[~zero], vertex[~zero]
 
 
-def _edges(es) -> np.ndarray:
-    """Edges as an (E, 4) array, without the zero-length ones unless all
-    are: such an edge never toggles, and a probe on it is on the next or
-    previous edge too (that edge's cross product there is exactly 0)."""
-    e = np.asarray(es, dtype=np.float64).reshape(-1, 4)
-    moving = (e[:, 0] != e[:, 2]) | (e[:, 1] != e[:, 3])
-    return e[moving] if moving.any() else e
+def _gap(a: np.ndarray, b: np.ndarray) -> float:
+    """The smallest distance between two edge sets (E, 4), 0 where two
+    edges cross."""
+    d = min(_seg_dist(e[:, i:i + 1], e[:, i + 1:i + 2], f).min()
+            for e, f in ((a, b), (b, a)) for i in (0, 2))
+
+    def side(e, px, py):
+        ax, ay, bx, by = (v[:, None] for v in e.T)
+        return np.sign((bx - ax) * (py - ay) - (by - ay) * (px - ax))
+    ab = side(a, b[:, 0], b[:, 1]) * side(a, b[:, 2], b[:, 3])
+    ba = side(b, a[:, 0], a[:, 1]) * side(b, a[:, 2], a[:, 3])
+    return 0.0 if ((ab < 0) & (ba < 0).T).any() else float(d)
 
 
 class _Shape:
     """A build geometry as rings (edge arrays in ring order, each ring
     closed as a cycle), its parts as (shell ring, hole rings), and paths
-    (lines, and points as zero-length edges) that only hold probes."""
+    (lines, and points as zero-length edges) that only hold probes.
+    ``dist`` holds every edge (``kernels.points_to_geom_distance``), ring
+    r's from ``offset[r]``, and ``vertex`` whether the kernel also takes
+    an edge's start's point distance (a folded zero-length edge)."""
 
     def __init__(self, g):
         name = g[0]
+        self.g, self.areal = g, name in ("Polygon", "MultiPolygon")
         self.rings, self.parts, self.paths = [], [], []
-        if name in ("Polygon", "MultiPolygon"):
+        folded = []
+        if self.areal:
             for rs in ([g[1]] if name == "Polygon" else g[1]):
                 ids = []
                 for r in rs:
                     ids.append(len(self.rings))
-                    self.rings.append(_edges(ring_edges(r)))
+                    folded.append(_fold(r, cyclic=True))
+                    # the kernel's ring test skips a ring of one vertex
+                    e = folded[-1][0]
+                    self.rings.append(e if len(r) > 1 else e[:0])
                 if ids:
                     self.parts.append((ids[0], ids[1:]))
-        elif name == "LineString":
-            self.paths = [_edges(path_edges(g[1]))]
-        elif name == "MultiLineString":
-            self.paths = [_edges(path_edges(line)) for line in g[1]]
+        elif name in ("LineString", "MultiLineString"):
+            for line in ([g[1]] if name == "LineString" else g[1]):
+                folded.append(_fold(line, cyclic=False))
+                self.paths.append(folded[-1][0])
         elif name == "MultiPoint":
-            self.paths = [_edges([(float(r[0]), float(r[1]), float(r[0]),
-                                   float(r[1])) for r in g[1]])]
+            r = np.asarray(g[1], dtype=np.float64).reshape(-1, 2)
+            folded.append((np.c_[r, r], np.zeros(len(r), dtype=bool)))
+            self.paths.append(folded[-1][0])
         else:
             raise ValueError(name)
+        self.offset = np.cumsum([0] + [len(e) for e, _ in folded])
+        self.dist = np.concatenate([e for e, _ in folded] + [np.empty((0, 4))])
+        self.vertex = np.concatenate([v for _, v in folded]
+                                     + [np.empty(0, dtype=bool)])
         coords = [e for e in self.rings + self.paths if len(e)]
         big = max((float(np.abs(e).max()) for e in coords), default=0.0)
         self.finite = all(np.isfinite(e).all() for e in coords)
@@ -154,8 +220,9 @@ class _Shape:
             out |= inside
         return out
 
-    def classify(self, X0, Y0, X1, Y1) -> dict:
-        """Sort the leaves [X0, X1] x [Y0, Y1] (arrays) for this shape."""
+    def classify(self, X0, Y0, X1, Y1, budget: tuple) -> dict:
+        """Sort the leaves [X0, X1] x [Y0, Y1] (arrays) for this shape,
+        with slots of at most ``budget`` (edges, toggles)."""
         m = self.margin
         x0, y0 = (X0 - m)[:, None], (Y0 - m)[:, None]
         x1, y1 = (X1 + m)[:, None], (Y1 + m)[:, None]
@@ -203,7 +270,7 @@ class _Shape:
             nloc += nl
             nvar_rings += has
             var_ring[has] = r
-            toggles[has] = (nv[has] + 1) // 2
+            toggles += np.where(has, (nv + 1) // 2, 0)
             local_of.append(loc)
             var_of.append(var)
         path_local = []
@@ -211,8 +278,7 @@ class _Shape:
             loc, _ = local(e)
             nloc += loc.sum(axis=1)
             path_local.append(loc)
-        ok = (~bad & (nvar_rings <= 1) & (nloc <= LEAF_EDGES)
-              & (toggles <= LEAF_TOGGLES))
+        ok = ~bad & (nloc <= budget[0]) & (toggles <= budget[1])
         truth = []
         for v in (False, True):
             p = parity.copy()
@@ -220,46 +286,192 @@ class _Shape:
             p[rows, var_ring[rows]] = v
             truth.append(self.truth(p))
         t0, t1 = truth
-        kind = np.where(t0 & t1, FULL,
-                        np.where(nloc > 0, EDGE, np.where(t0, FULL, -1)))
         const = np.zeros(n, dtype=bool)
         rows = np.flatnonzero(var_ring >= 0)
         const[rows] = parity[rows, var_ring[rows]]
+        multi = {}
+        for j in np.flatnonzero((nvar_rings > 1) & ok):
+            rings = [r for r, loc in enumerate(local_of) if loc[j].any()]
+            got = self._merge(parity[j], rings)
+            ok[j] = got is not None
+            if ok[j]:
+                const[j], t0[j], t1[j] = got
+                multi[j] = rings
+        kind = np.where(t0 & t1, FULL,
+                        np.where(nloc > 0, EDGE, np.where(t0, FULL, -1)))
         return {"ok": ok, "kind": kind, "t0": t0, "t1": t1, "p": const,
                 "nloc": nloc, "toggles": toggles, "var_ring": var_ring,
-                "local": local_of, "var": var_of, "path_local": path_local}
+                "multi": multi, "local": local_of, "var": var_of,
+                "path_local": path_local, "refine": (nloc > 0) | ~ok}
+
+    def rings_of(self, c: dict, leaf: int) -> list:
+        """The rings with edges local to a leaf."""
+        r = c["var_ring"][leaf]
+        return c["multi"].get(leaf, [r] if r >= 0 else [])
+
+    def _merge(self, parity: np.ndarray, rings: list) -> tuple | None:
+        """A leaf's (constant bit, T[0], T[1]) over the parity of several
+        rings with local edges, or None (touching rings): rings more than
+        2m apart are nested or apart, so the sets of them a probe lies in
+        are a ring and the rings around it, and T must be a function of
+        the parity over those sets."""
+        around = {r: set() for r in rings}
+        for a in rings:
+            for b in rings:
+                if a < b and _gap(self.rings[a], self.rings[b]) <= 2 * self.margin:
+                    return None
+                vx, vy = self.rings[b][0, :2]
+                if a != b and K.points_in_ring(np.array([vx]), np.array([vy]),
+                                               self.rings[a][:, :2])[0]:
+                    around[b].add(a)
+        f = {}
+        for sets in [set()] + [{r} | around[r] for r in rings]:
+            p = parity.copy()
+            p[rings] = [r in sets for r in rings]
+            t = bool(self.truth(p[None, :])[0])
+            if f.setdefault(len(sets) % 2, t) != t:
+                return None
+        return (bool(np.logical_xor.reduce(parity[rings])), f.get(0, False),
+                f.get(1, False))
+
+    def sort(self, X0, Y0, X1, Y1, dw: tuple | None, budget: tuple,
+             slots: bool = True) -> dict:
+        """Classify the leaves [X0, X1] x [Y0, Y1]: ``kind`` (FULL, EDGE,
+        or -1 for dropped), ``ok`` and ``refine`` (a coarse cell to split)
+        per leaf, for slots of at most ``budget`` (edges, toggles).  Under
+        dwithin (``dw`` = (pad, dmin): the largest distance and the
+        smallest that can match) also the bounds ``lo`` and ``hi`` and,
+        with ``slots``, each EDGE leaf's slot ``edges``."""
+        c = self.classify(X0, Y0, X1, Y1, budget)
+        if dw is None:
+            return c
+        pad, dmin = dw
+        m, e, n = self.margin, self.dist, len(X0)
+        box = np.c_[X0 - m, Y0 - m, X1 + m, Y1 + m]
+        x0, y0, x1, y1 = (box[:, i:i + 1] for i in range(4))
+        # per leaf and edge, a lower bound of their distance (the edge's
+        # bbox's), and the largest distance of a leaf point (at a
+        # corner: a segment's distance is convex)
+        near = np.hypot(
+            np.maximum(np.maximum(np.minimum(e[:, 0], e[:, 2]) - x1,
+                                  x0 - np.maximum(e[:, 0], e[:, 2])), 0.0),
+            np.maximum(np.maximum(np.minimum(e[:, 1], e[:, 3]) - y1,
+                                  y0 - np.maximum(e[:, 1], e[:, 3])), 0.0))
+        far = np.maximum.reduce([_seg_dist(cx, cy, e) for cx in (x0, x1)
+                                 for cy in (y0, y1)])
+        lo = np.maximum(near.min(axis=1, initial=np.inf) - m, 0.0)
+        hi = far.min(axis=1, initial=np.inf) + m
+        pip = c["kind"] if self.areal else np.full(n, -1)
+        lo[pip >= 0] = 0.0          # the leaf meets the polygon
+        hi[pip == FULL] = 0.0       # it lies inside
+        kind = np.where(lo > pad, -1, np.where(hi <= dmin, FULL, EDGE))
+        ok = c["ok"] if self.areal else np.ones(n, dtype=bool)
+        c.update(kind=kind, lo=lo, hi=hi, pip=pip, edges={})
+        if slots and ok.all():
+            c["edges"] = self._near(c, box, near <= pad + m, pad, budget[0])
+            if c["edges"] is None:
+                ok = np.zeros(n, dtype=bool)
+        c.update(ok=ok, refine=(kind == EDGE) | ~ok)
+        return c
+
+    def _near(self, c: dict, box, cand, pad: float, max_edges: int):
+        """Each EDGE leaf's slot edges as {leaf: (dist positions, local
+        ones)}, or None if a leaf needs more than ``max_edges``: its local
+        edges and each edge near it (``cand``) that can hold a probe's
+        smallest distance there.  On a grid of sample boxes (r their
+        half-diagonal, so a sample bounds its box within 2r) an edge is
+        left out where its distance exceeds the nearest one's by more
+        than 2r + m, where every distance exceeds the pad, and inside
+        the polygon."""
+        m, out = self.margin, {}
+        todo = np.flatnonzero(c["kind"] == EDGE).tolist()
+        local = {j: [self.offset[r] + k for r in self.rings_of(c, j)
+                     for k in np.flatnonzero(c["local"][r][j]).tolist()]
+                 if c["pip"][j] == EDGE else [] for j in todo}
+        for k in (0,) + _SAMPLES:       # 0: every near edge, no samples
+            g = (np.arange(k) + 0.5) / max(k, 1)
+            gx, gy = (a.ravel() for a in np.meshgrid(g, g))
+            left, step = [], (1 << 20) // max(1, k * k * len(self.dist))
+            for at in range(0, len(todo), max(step, 1)):
+                J = np.array(todo[at:at + max(step, 1)])
+                U = np.flatnonzero(cand[J].any(axis=0))
+                need = cand[J][:, U]
+                if k:
+                    x0, y0, x1, y1 = (box[J, i:i + 1] for i in range(4))
+                    sx, sy = x0 + gx * (x1 - x0), y0 + gy * (y1 - y0)
+                    r = 0.5 * np.hypot(x1 - x0, y1 - y0) / k
+                    D = np.where(need[:, None], _seg_dist(
+                        sx[..., None], sy[..., None], self.dist[U]), np.inf)
+                    env = D.min(axis=2)
+                    rel = env - r <= pad + m
+                    deep = (c["pip"][J] == EDGE)[:, None] & (env > r + m)
+                    if deep.any():
+                        rel &= ~(deep & K.points_in_geom(
+                            sx.ravel(), sy.ravel(), self.g).reshape(sx.shape))
+                    with np.errstate(invalid="ignore"):
+                        need = ((D - env[..., None] <= 2 * r[..., None] + m)
+                                & rel[..., None]).any(axis=1)
+                for i, j in enumerate(J.tolist()):
+                    keep = sorted(set(local[j]) | set(U[need[i]].tolist()))
+                    if len(keep) <= max_edges:
+                        out[j] = (keep, local[j])
+                    else:
+                        left.append(j)
+            todo = left
+        return None if todo else out
 
     def slot(self, c: dict, leaf: int) -> tuple:
-        """An EDGE leaf's slot: its constant parity bit, truth table, local
-        edges (ax, ay, bx, by) and the vertex ys of its varying toggles."""
+        """An EDGE leaf's slot: its constant parity bit, truth table, edges
+        and the vertex ys of its varying toggles, in pairs (an odd count
+        per ring pairs its last end with -inf, never above a probe).  The
+        edges are its local edges (ax, ay, bx, by), or under dwithin its
+        slot's distance edges (ax, ay, bx, by, local)."""
         edges, ys = [], []
-        r = c["var_ring"][leaf]
-        if r >= 0:
+        inside = "edges" not in c or c["pip"][leaf] == EDGE
+        for r in (self.rings_of(c, leaf) if inside else []):
             e = self.rings[r]
             edges.extend(e[c["local"][r][leaf]].tolist())
-            ys = e[c["var"][r][leaf], 1].tolist()
-        for e, loc in zip(self.paths, c["path_local"]):
-            edges.extend(e[loc[leaf]].tolist())
-        return (bool(c["p"][leaf]), bool(c["t0"][leaf]), bool(c["t1"][leaf]),
-                edges, ys)
+            v = e[c["var"][r][leaf], 1].tolist()
+            ys += v + [-np.inf] * (len(v) % 2)
+        if "edges" in c:
+            sel, local = c["edges"][leaf]
+            edges = [(*self.dist[i].tolist(), i in local, self.vertex[i])
+                     for i in sel]
+        else:
+            for e, loc in zip(self.paths, c["path_local"]):
+                edges.extend(e[loc[leaf]].tolist())
+        return (bool(c["p"][leaf]) and inside, bool(c["t0"][leaf]) and inside,
+                bool(c["t1"][leaf]) and inside, edges, ys)
 
 
-def _edge_slot(ax, ay, bx, by) -> tuple:
-    """One local edge's slot values, in the kernel's arithmetic."""
+def _edge_slot(ax, ay, bx, by, local=True, vertex=None) -> tuple:
+    """One slot edge's values, in the kernel's arithmetic.  Under dwithin
+    (``vertex`` not None) an edge that is not local never crosses nor
+    holds a probe (ay = by, an empty bbox), and two values follow:
+    ``ll``, its squared length (1 for a zero-length edge: the clamped
+    projection is then 0, so its distance is the point distance), and
+    ``z``, 0 if its start's point distance counts too, else inf."""
     dx, dy = bx - ax, by - ay + 0.0
-    return (ax, ay, by, dx, dy, min(ax, bx), max(ax, bx), min(ay, by),
+    vals = (ax, ay, by, dx, dy, min(ax, bx), max(ax, bx), min(ay, by),
             max(ay, by), 1e-12 * max(1.0, abs(dx) + abs(by - ay)))
+    if vertex is None:
+        return vals
+    if not local:
+        vals = vals[:2] + (ay,) + vals[3:5] + _NO_EDGE[5:]
+    return vals + ((dx * dx + dy * dy) or 1.0, 0.0 if vertex else np.inf)
 
 
 class Leaves:
     """A build side's leaf tables at one coarse resolution, or the reason
-    the side keeps the lambda refine (``reason`` not None).  ``cell_rows``
+    the side cannot be decomposed (``reason`` not None).  ``cell_rows``
     holds one row per kept (leaf, build row); ``slot_rows`` one row per
     EDGE slot.  ``cells`` and ``slots`` are the Spark tables the caller
-    makes from them."""
+    makes from them.  ``dwithin`` says whether they carry the distance
+    bounds and slots."""
 
-    def __init__(self, res: int, reason: str | None = None):
-        self.res, self.reason = res, reason
+    def __init__(self, res: int, reason: str | None = None,
+                 dwithin: bool = False):
+        self.res, self.reason, self.dwithin = res, reason, dwithin
         self.split = 0
         self.refined: list = []
         self.cell_rows = self.slot_rows = None
@@ -276,11 +488,12 @@ class Leaves:
                    for f in (self.cell_rows, self.slot_rows) if f is not None)
 
 
-def _border(cells: np.ndarray, res: int) -> bool:
-    n = (1 << res) - 1
+def _on_border(cells: np.ndarray) -> np.ndarray:
+    """Whether each cell lies on the grid border of its own level."""
+    n = (1 << (cells >> grid._RES_SHIFT)) - 1
     ix = (cells >> grid._X_SHIFT) & ((1 << 29) - 1)
     iy = cells & ((1 << 29) - 1)
-    return bool(((ix == 0) | (ix == n) | (iy == 0) | (iy == n)).any())
+    return (ix == 0) | (ix == n) | (iy == 0) | (iy == n)
 
 
 def _boxes(ix, iy, res):
@@ -289,11 +502,14 @@ def _boxes(ix, iy, res):
             -180.0 + (ix + 1) * w, -90.0 + (iy + 1) * h)
 
 
-def build(cells: pd.DataFrame, geoms: list, boxes: set, res: int) -> Leaves:
+def build(cells: pd.DataFrame, geoms: list, boxes: set, res: int,
+          dw: tuple | None = None) -> Leaves:
     """The leaf table of a build side from its coarse cell rows ``cells``
     (``__cell``, ``__ridx``, ``__pos`` and the bbox ``__x0..__y1``),
     its decoded geometries by position and the positions of its box rows
-    (rects and points)."""
+    (rects and points).  Under dwithin ``dw`` is (pad, dmin): the cell
+    rows' pad, the largest distance, and the smallest that can match."""
+    pad = 0.0 if dw is None else dw[0]
     rows = []
     for pos, grp in cells.groupby("__pos", sort=True):
         first = grp.iloc[0]
@@ -303,46 +519,56 @@ def build(cells: pd.DataFrame, geoms: list, boxes: set, res: int) -> Leaves:
                      grp["__cell"].to_numpy(dtype=np.int64)))
     shapes, coarse = {}, {}
     refined: set = set()
-    for pos, _, _, cs in rows:
+    for pos, _, (x0, y0, x1, y1), cs in rows:
         if pos in boxes:
             continue
         shape = shapes[pos] = _Shape(geoms[pos])
         if not shape.finite:
             return Leaves(res, "a non-finite coordinate")
-        if _border(cs, res):
-            return Leaves(res, "a polygon in a grid-border cell")
+        # probes outside the world must fail the row's bbox test
+        w = 0.0 if dw is None else pad + shape.margin
+        if not (x0 - w >= -180.0 and x1 + w <= 180.0
+                and y0 - w >= -90.0 and y1 + w <= 90.0):
+            return Leaves(res, "a geometry past the grid border")
         ix = (cs >> grid._X_SHIFT) & ((1 << 29) - 1)
         iy = cs & ((1 << 29) - 1)
-        c = coarse[pos] = shape.classify(*_boxes(ix, iy, res))
-        refined.update(cs[(c["nloc"] > 0) | ~c["ok"]].tolist())
-    out = Leaves(res)
+        c = coarse[pos] = shape.sort(*_boxes(ix, iy, res), dw,
+                                     (LEAF_EDGES, LEAF_TOGGLES), slots=False)
+        refined.update(cs[c["refine"]].tolist())
+    out = Leaves(res, dwithin=dw is not None)
     out.refined = sorted(refined)
     if not refined:
         return _assemble(out, rows, shapes, coarse, {}, boxes)
-    for split in range(1, MAX_LEAF_SPLIT + 1):
-        if (res + split > grid.MAX_RES
-                or len(refined) << (2 * split) > _MAX_FINE_CELLS):
-            break
-        fine = _split(rows, shapes, boxes, refined, res, split)
+    splits = [s for s in range(1, MAX_LEAF_SPLIT + 1)
+              if res + s <= grid.MAX_RES
+              and len(refined) << (2 * s) <= _MAX_FINE_CELLS]
+    # the smallest split whose leaves fit the slot budget, else the
+    # finest with wide slots
+    tries = [(s, (LEAF_EDGES, LEAF_TOGGLES)) for s in splits]
+    tries += [(s, (_WIDE_EDGES, _WIDE_TOGGLES)) for s in splits[-1:]]
+    for split, budget in tries:
+        fine = _split(rows, shapes, boxes, refined, res, split, dw, budget)
         if fine is not None:
             out.split = split
             return _assemble(out, rows, shapes, coarse, fine, boxes)
-    return Leaves(res, f"a leaf needs more than {LEAF_EDGES} edges or "
-                       f"{LEAF_TOGGLES} toggles, or holds two rings, at "
-                       f"res {res + MAX_LEAF_SPLIT}")
+    return Leaves(res, f"a leaf needs more than {_WIDE_EDGES} edges or "
+                       f"{_WIDE_TOGGLES} toggles, or holds touching rings, "
+                       f"at res {res + (splits or [0])[-1]}")
 
 
-def _split(rows, shapes, boxes, refined, res, split):
+def _split(rows, shapes, boxes, refined, res, split, dw, budget):
     """Each row's fine leaves inside the refined coarse cells, as
     {pos: (fine cell ids, classification or None for a box row)}, or
     None if some leaf cannot be decomposed at this level."""
     fine = res + split
+    pad = 0.0 if dw is None else dw[0]
     out = {}
     for pos, _, (x0, y0, x1, y1), cs in rows:
         mine = [c for c in cs.tolist() if c in refined]
         if not mine:
             continue
-        fx0, fx1, fy0, fy1 = grid._covering_range(x0, y0, x1, y1, fine)
+        fx0, fx1, fy0, fy1 = grid._covering_range(x0 - pad, y0 - pad,
+                                                  x1 + pad, y1 + pad, fine)
         ixs, iys = [], []
         for c in mine:
             _, cx, cy = grid.unpack(c)
@@ -358,7 +584,7 @@ def _split(rows, shapes, boxes, refined, res, split):
         iy = np.concatenate(iys).astype(np.int64)
         c = None
         if pos not in boxes:
-            c = shapes[pos].classify(*_boxes(ix, iy, fine))
+            c = shapes[pos].sort(*_boxes(ix, iy, fine), dw, budget)
             if not c["ok"].all():
                 return None
         out[pos] = ((np.int64(fine) << grid._RES_SHIFT)
@@ -368,60 +594,74 @@ def _split(rows, shapes, boxes, refined, res, split):
 
 def _assemble(out: Leaves, rows, shapes, coarse, fine, boxes) -> Leaves:
     """The leaf rows (each kept (leaf, build row) with its kind, bbox and,
-    for an EDGE row, its slot id) and the slot rows."""
+    for an EDGE row, its slot id; under dwithin its distance bounds) and
+    the slot rows."""
     refined = set(out.refined)
     recs, slots = [], []
     for pos, ridx, bbox, cs in rows:
-        leaves = [(c, BOX if pos in boxes else coarse[pos]["kind"][j], j)
-                  for j, c in enumerate(cs.tolist()) if c not in refined]
+        keep = np.array([c not in refined for c in cs.tolist()], dtype=bool)
+        parts = [(cs, coarse.get(pos), keep)]
         if pos in fine:
             ids, c = fine[pos]
-            leaves += [(f, BOX if c is None else c["kind"][j], j)
-                       for j, f in enumerate(ids.tolist())]
-        for cell, kind, j in leaves:
-            slot = None
-            if kind == EDGE:        # only fine leaves have edges
-                slot = len(slots)
-                slots.append(shapes[pos].slot(fine[pos][1], j))
-            if kind >= 0:
-                recs.append((cell, ridx, int(kind), *bbox, slot))
-    cols = list(CELL_COLS)
+            parts.append((ids, c, np.ones(len(ids), dtype=bool)))
+        for ids, c, keep in parts:
+            for j in np.flatnonzero(keep):
+                kind, bounds = BOX, (0.0, 0.0)
+                if c is not None:
+                    kind = int(c["kind"][j])
+                    if out.dwithin:
+                        bounds = (float(c["lo"][j]), float(c["hi"][j]))
+                slot = None
+                if kind == EDGE:        # only fine leaves have edges
+                    slot = len(slots)
+                    slots.append(shapes[pos].slot(c, j))
+                elif kind == FULL and _on_border(ids[j:j + 1])[0]:
+                    # behind the bbox test (under dwithin d >= hi too)
+                    kind, bounds = BBOX, (bounds[1], bounds[1])
+                if kind >= 0:
+                    recs.append((int(ids[j]), ridx, kind, *bbox, slot)
+                                + (bounds if out.dwithin else ()))
+    cols = list(CELL_COLS) + (list(DIST_COLS) if out.dwithin else [])
     out.cell_rows = pd.DataFrame(recs, columns=cols).astype(
         {"__cell": "int64", "__ridx": "int64", "__kind": "int32",
-         "__slot": "Int64", **{c: "float64" for c in cols[3:7]}})
+         "__slot": "Int64",
+         **{c: "float64" for c in cols[3:7] + cols[len(CELL_COLS):]}})
     out.max_edges = max((len(s[3]) for s in slots), default=0)
-    out.max_toggles = max(((len(s[4]) + 1) // 2 for s in slots), default=0)
+    out.max_toggles = max((len(s[4]) // 2 for s in slots), default=0)
+    edge_cols = _EDGE_COLS + (("ll", "z") if out.dwithin else ())
     srows = []
     for i, (p, t0, t1, edges, ys) in enumerate(slots):
         vals = [i, p, t0, t1]
         for k in range(out.max_edges):
-            vals += _edge_slot(*edges[k]) if k < len(edges) else _NO_EDGE
-        # toggle ends in pairs: an odd count pairs its last end with -inf
-        # (never above py), unused pairs are (0, 0)
-        ys = ys + [-np.inf] * (len(ys) % 2)
+            vals += (_edge_slot(*edges[k]) if k < len(edges)
+                     else _NO_NEAR if out.dwithin else _NO_EDGE)
+        # unused toggle pairs are (0, 0)
         vals += ys + [0.0] * (2 * out.max_toggles - len(ys))
         srows.append(vals)
     if srows:
         out.slot_rows = pd.DataFrame(srows, columns=(
             ["__slot", "__lp", "__t0", "__t1"]
-            + [f"__{c}{k}" for k in range(out.max_edges) for c in _EDGE_COLS]
+            + [f"__{c}{k}" for k in range(out.max_edges) for c in edge_cols]
             + [f"__{e}{t}" for t in range(out.max_toggles)
                for e in ("ta", "tb")]))
     kinds = out.cell_rows["__kind"]
     out.counts = {"box": int((kinds == BOX).sum()),
-                  "full": int((kinds == FULL).sum()),
+                  "full": int(kinds.isin((FULL, BBOX)).sum()),
                   "edge": int((kinds == EDGE).sum())}
     return out
 
 
 def slot_test_sql(px: str, py: str, n_edges: int, n_toggles: int,
-                  boundary: bool) -> str:
+                  boundary: bool, d: str | None = None) -> str:
     """The EDGE slot test over the slot columns, lambda-free:
     ``on OR T[v]`` for boundary-inclusive predicates, ``NOT on AND T[v]``
     for ``within``; ``v`` is the constant bit XOR each local edge's
-    crossing toggle (the kernel's arithmetic) XOR each right-side toggle."""
+    crossing toggle (the kernel's arithmetic) XOR each right-side toggle.
+    Under dwithin (``d`` the distance's SQL) ``(d >= 0 AND (on OR T[v]))
+    OR`` some slot edge's distance ``<= d``, clamp then ``hypot`` as in
+    ``kernels.points_seg_dist``."""
     flips = ["__lp"]
-    on = []
+    on, near = [], []
     for k in range(n_edges):
         ax, ay, by, dx, dy, mnx, mxx, mny, mxy, tol = (
             f"__{c}{k}" for c in _EDGE_COLS)
@@ -430,6 +670,11 @@ def slot_test_sql(px: str, py: str, n_edges: int, n_toggles: int,
         on.append(f"({px} >= {mnx} AND {px} <= {mxx} AND {py} >= {mny} AND "
                   f"{py} <= {mxy} AND abs({dx} * ({py} - {ay}) - "
                   f"{dy} * ({px} - {ax})) < {tol})")
+        t = (f"least(greatest((({px} - {ax}) * {dx} + ({py} - {ay}) * {dy})"
+             f" / __ll{k}, 0.0D), 1.0D)")
+        near.append(f"hypot({px} - ({ax} + {t} * {dx}), "
+                    f"{py} - ({ay} + {t} * {dy})) <= {d} OR "
+                    f"hypot({px} - {ax}, {py} - {ay}) + __z{k} <= {d}")
     for t in range(n_toggles):
         flips.append(f"((__ta{t} > {py}) != (__tb{t} > {py}))")
     v = flips[0]
@@ -437,6 +682,9 @@ def slot_test_sql(px: str, py: str, n_edges: int, n_toggles: int,
         v = f"(({v}) != ({f}))"
     t = f"IF({v}, __t1, __t0)"
     on_sql = " OR ".join(on) if on else "false"
+    if d is not None:
+        return " OR ".join([f"(({d}) >= 0.0D AND (({on_sql}) OR {t}))"]
+                           + near)
     if boundary:
         return f"(({on_sql}) OR {t})"
     return f"(NOT ({on_sql}) AND {t})"

@@ -7,12 +7,13 @@ from the operator that runs it (``SpatialJoinExec``),
 frozen ``JoinPlan`` naming the tier and why each faster tier was passed
 over.  The tiers, fastest first:
 
-- ``jvm_leaf`` / ``jvm_lambda`` (``jvm_join``): a broadcast cell-key hash
-  join refined in the JVM, zero Python per row; lon/lat probes against
-  rects, points, lines and polygons of at most 512 edges (WKB point
-  probes against all-rect layers).  ``jvm_leaf`` refines polygons with
-  the lambda-free leaf refine (``leaf_refine``); ``jvm_lambda`` with
-  higher-order functions over edge arrays.
+- ``jvm`` (``jvm_join``): a broadcast cell-key hash join refined in the
+  JVM, zero Python per row; lon/lat probes against rects, points, lines
+  and polygons of at most 512 edges (WKB point probes against all-rect
+  layers), under intersects, coveredby, within and dwithin.  Every
+  non-box row takes the lambda-free leaf refine (``leaf_refine``); a
+  side it cannot decompose (touching rings, a leaf over the slot limits,
+  a non-finite coordinate, a bbox past the world) takes the next tier.
 - ``fused`` (``fused_join``): one mapInPandas pass over the probe side
   against a broadcast cell index of the collected build side, refined
   by the numpy kernels.
@@ -42,7 +43,8 @@ from sedona_db_spark.operators.cell_join import _bbox_stats, _cell_join
 from sedona_db_spark.operators.fused_join import (_ANY_PROBE_PREDICATES,
                                                   _POINT_PROBE_PREDICATES,
                                                   _fused_join)
-from sedona_db_spark.operators.jvm_join import _distance, _jvm_join
+from sedona_db_spark.operators.jvm_join import (_distance, _distance_bounds,
+                                                _jvm_join)
 
 # reference join types: Inner/Left/Right/Full/LeftSemi/LeftAnti/LeftMark
 # (rust/sedona-spatial-join/src/exec.rs:235-240); "mark" here surfaces the
@@ -50,10 +52,9 @@ from sedona_db_spark.operators.jvm_join import _distance, _jvm_join
 # (the correlated-EXISTS shape, test_sjoin.py:267)
 JOIN_TYPES = ("inner", "left", "right", "full", "left_semi", "left_anti", "mark")
 
-TIERS = ("jvm_leaf", "jvm_lambda", "fused", "cell")   # fastest first
-# predicates the all-JVM tier refines, and those it refines with leaves
+TIERS = ("jvm", "fused", "cell")   # fastest first
+# predicates the all-JVM tier refines
 _JVM_PREDICATES = ("intersects", "coveredby", "within", "dwithin")
-_LEAF_PREDICATES = ("intersects", "coveredby", "within")
 
 # below this build-side row count the byte guard's pre-check aggregate is
 # skipped (it would evaluate a python-UDF geometry column — one extra
@@ -288,7 +289,6 @@ def _plan_spatial_join(left, right, predicate, how, distance, distance_side,
     tier's bbox statistics.  Builds no output frame."""
     predicate = predicate.lower()
     _check_arguments(predicate, how, distance, distance_side, pattern)
-    original_right = right
     rmap = right_suffix_map(left.columns, right.columns)
     right = right.select([F.col(c).alias(rmap[c]) for c in right.columns])
     rgeom = rmap[right_geom]
@@ -402,7 +402,7 @@ def _plan_spatial_join(left, right, predicate, how, distance, distance_side,
             why_not = (f"{side.nbytes} collected build geometry bytes over "
                        "the broadcast budget")
             side, broadcast_cells = None, False
-    rejected = [(t, why_not) for t in TIERS[:3]] if why_not else []
+    rejected = [(t, why_not) for t in TIERS[:2]] if why_not else []
     if side is not None:
         if res is None:
             # same heuristic as pick_join_res over _bbox_stats, but exact
@@ -431,27 +431,18 @@ def _plan_spatial_join(left, right, predicate, how, distance, distance_side,
                    "no build geometry" if not shapes else
                    "build rows of kind " + ", ".join(sorted(shapes - jvm_ok))
                    if not shapes <= jvm_ok else
-                   "non-point probe rows" if probe_exploded() else None)
-        if why_not is not None:
-            rejected = [(t, why_not) for t in TIERS[:2]]
-        else:
-            why_not = (f"no leaf refine for {predicate}"
-                       if predicate not in _LEAF_PREDICATES
-                       else side.leaf_table(res).reason)
-            rejected = [("jvm_leaf", why_not)] if why_not else []
+                   "non-point probe rows" if probe_exploded() else
+                   side.leaf_table(res, *_distance_bounds(
+                       predicate, pad, ldist_col)).reason)
+        rejected = [("jvm", why_not)] if why_not else []
     tier = TIERS[len(rejected)]
 
     exploded = probe_exploded() if tier == "cell" else probe_exploded(False)
     if tier == "cell":
         if left_lonlat is not None and left_geom not in left.columns:
-            # the cell tier gives a lon/lat probe its geometry column for
-            # the refine: name the build columns apart from it too
-            rmap = right_suffix_map([*left.columns, left_geom],
-                                    original_right.columns)
-            right = original_right.select(
-                [F.col(c).alias(rmap[c]) for c in original_right.columns])
-            rgeom = rmap[right_geom]
-            dist_col = None if dist_col is None else rmap[distance]
+            # the cell tier refines a lon/lat probe against its point, in
+            # a column of its own that the output leaves out
+            left_geom = "__lpoint"
         # choose the resolution from BOTH sides' bbox statistics (a fine
         # res that suits a point side would blow up the covering of an
         # extended other side; take the coarser of the two caps).  The

@@ -1,14 +1,15 @@
 """The all-JVM tier's leaf refine, differential against the numpy kernels.
 
-Under intersects, coveredby and within, a lon/lat probe joined to a
-polygon layer takes a lambda-free refine: boundary cells are split into
-finer leaves and each (leaf, build row) pair is a box test, a match with
-no test, a small exact slot test or no candidate at all
+Under intersects, coveredby, within and dwithin, a lon/lat probe joined
+to a polygon layer takes a lambda-free refine: boundary cells are split
+into finer leaves and each (leaf, build row) pair is a box test, a match
+with no test, a small exact slot test or no candidate at all
 (``operators/leaf_refine.py``).  The rows must equal the kernels' under
 every join type, for probes on leaf corners and edges, polygon vertices
-and edge midpoints, and at their ``nextafter`` neighbours; layers the
-refine cannot decompose (touching rings, a polygon in a grid-border
-cell) keep the lambda refine and must match too.
+and edge midpoints, exactly a distance away from edges and vertices, and
+at their ``nextafter`` neighbours; polygons in grid-border cells take the
+refine too, and a layer it cannot decompose (touching rings) takes the
+fused tier and must match too.
 """
 
 import importlib
@@ -74,9 +75,11 @@ TOUCHING = [
                       [np.array([(16, 4), (19, 7), (13, 7), (16, 4)],
                                 float)]]),
 ]
-# coarse cells on the grid border, where probes outside the world land
+# coarse cells on the grid border, where probes outside the world land;
+# the last polygon has an edge on the border, so leaves inside it there
 BORDER = [_poly([(176, 10), (179.9, 11), (177, 14), (176, 10)]),
-          _poly([(-170, -89.5), (-165, -88), (-168, -86), (-170, -89.5)])]
+          _poly([(-170, -89.5), (-165, -88), (-168, -86), (-170, -89.5)]),
+          _poly([(174, 20), (180, 20), (180, 26), (175, 25), (174, 20)])]
 
 
 def _around(x, y):
@@ -130,25 +133,42 @@ def _layer(spark, geoms):
         {"gid": range(len(geoms)), "geom": [W.encode(g) for g in geoms]}))
 
 
-def _check(spark, geoms, preds, probes, leaf: bool):
+def _check(spark, geoms, preds, probes, tier: str = "jvm", dist=None):
+    """Every join type of each predicate against the kernels, on
+    ``tier``; ``dist`` is dwithin's literal distance or, as a list, a
+    per-probe distance column (None for NULL)."""
     layer = _layer(spark, geoms)
-    pdf = spark.createDataFrame(pd.DataFrame({
-        "pid": range(len(probes)), "lon": [p[0] for p in probes],
-        "lat": [p[1] for p in probes]}))
+    column = isinstance(dist, list)
+    pdf = spark.createDataFrame(
+        [(i, float(x), float(y), dist[i] if column else 0.0)
+         for i, (x, y) in enumerate(probes)],
+        "pid long, lon double, lat double, dist double")
     P = [("Point", np.array(p)) for p in probes]
     n = len(probes)
     for pred in preds:
-        fn = KERNELS[pred]
+        if pred == "dwithin":
+            kw = ({"distance": "dist", "distance_side": "probe"} if column
+                  else {"distance": dist})
+            ds = dist if column else [dist] * n
+
+            def fn(p, g, i):
+                return (ds[i] is not None and not np.isnan(ds[i])
+                        and K.geom_dwithin(p, g, ds[i]))
+        else:
+            kw = {}
+
+            def fn(p, g, i, kern=KERNELS[pred]):
+                return kern(p, g)
         exp = {(i, gi) for i, p in enumerate(P) for gi, g in enumerate(geoms)
-               if fn(p, g)}
+               if fn(p, g, i)}
         hit = {i for i, _ in exp}
         for how in HOWS:
             j = spatial_join(pdf, layer, pred, how, left_lonlat=("lon", "lat"),
-                             res=RES)
+                             res=RES, **kw)
             rows = j.collect()
             plan = j._jdf.queryExecution().executedPlan().toString()
-            assert "MapInPandas" not in plan and "EvalPython" not in plan
-            assert ("lambdafunction" not in plan) == leaf, (pred, how)
+            assert "EvalPython" not in plan and "lambdafunction" not in plan
+            assert ("MapInPandas" in plan) == (tier == "fused"), (pred, how)
             case = (pred, how)
             if how == "inner":
                 assert {(r["pid"], r["gid"]) for r in rows} == exp, case
@@ -174,8 +194,7 @@ def test_leaf_refine_polygons_vs_kernels(spark):
     polygon inside one coarse cell, an edge 1 ulp from a cell line and a
     box row, under intersects, coveredby and within."""
     probes = _probes(POLYS, 1)
-    _check(spark, POLYS, ("intersects", "coveredby", "within"), probes,
-           leaf=True)
+    _check(spark, POLYS, ("intersects", "coveredby", "within"), probes)
     lv = _leaves()
     assert lv.reason is None and lv.split >= 1 and lv.counts["edge"]
     assert lv.max_edges <= LR.LEAF_EDGES and lv.max_toggles <= LR.LEAF_TOGGLES
@@ -185,22 +204,83 @@ def test_leaf_refine_lines_points_vs_kernels(spark):
     """Lines, multipoints and points among the polygons: lines and
     multipoints hold only the probes on them; a point is a box."""
     geoms = POLYS + LINES_POINTS
-    _check(spark, geoms, ("intersects", "coveredby"), _probes(geoms, 2),
-           leaf=True)
+    _check(spark, geoms, ("intersects", "coveredby"), _probes(geoms, 2))
 
 
-@pytest.mark.parametrize("geoms", [TOUCHING, BORDER],
+# probes outside the world clamp into the grid-border cells
+OUTSIDE = [(180.0, 12.0), (181.0, 12.0), (200.0, 11.0), (-170.0, -91.0),
+           (-200.0, -89.0), (179.95, 11.0), (181.0, 22.0), (200.0, 23.0)]
+
+
+@pytest.mark.parametrize("geoms,tier", [(TOUCHING, "fused"), (BORDER, "jvm")],
                          ids=["touching_rings", "grid_border"])
-def test_leaf_refine_fallback_vs_kernels(spark, geoms):
-    """Layers the leaf refine cannot decompose keep the lambda refine,
-    with the same rows as the kernels; border probes include points
-    outside the world, which clamp into the border cells."""
-    probes = _probes(geoms, 3) + [(180.0, 12.0), (181.0, 12.0),
-                                  (200.0, 11.0), (-170.0, -91.0),
-                                  (-200.0, -89.0), (179.95, 11.0)]
-    _check(spark, geoms, ("intersects", "coveredby", "within"), probes,
-           leaf=False)
-    assert _leaves().reason is not None
+def test_leaf_refine_fallback_vs_kernels(spark, geoms, tier):
+    """Polygons in grid-border cells take the leaf refine, behind each
+    row's bbox test there; touching rings cannot be decomposed and take
+    the fused tier, with the leaf table's reason.  Both give the kernels'
+    rows; border probes include points outside the world."""
+    probes = _probes(geoms, 3) + OUTSIDE
+    _check(spark, geoms, ("intersects", "coveredby", "within"), probes, tier)
+    assert (_leaves().reason is None) == (tier == "jvm")
+
+
+def _dwithin_probes(geoms, d):
+    """Points exactly ``d`` from every edge (off its midpoint, both sides)
+    and from every vertex (along both axes and the outward bisector),
+    each with its four nextafter neighbours."""
+    pts = []
+    for g in geoms:
+        if g[0] in ("Point", "MultiPoint"):
+            rings = [np.asarray(g[1]).reshape(-1, 2)]
+        elif g[0] == "LineString":
+            rings = [g[1]]
+        else:
+            parts = [g[1]] if g[0] == "Polygon" else g[1]
+            rings = [r for rs in parts for r in rs]
+        for ring in rings:
+            ring = np.asarray(ring, dtype=np.float64)
+            for k, (ax, ay) in enumerate(ring):
+                bx, by = ring[(k + 1) % len(ring)]
+                cx, cy = ring[k - 1]
+                for ux, uy in ((1, 0), (-1, 0), (0, 1), (0, -1)):
+                    pts += _around(ax + ux * d, ay + uy * d)
+                u = np.array([ax - bx, ay - by]), np.array([ax - cx, ay - cy])
+                u = sum(v / (np.hypot(*v) or 1.0) for v in u)
+                if np.hypot(*u):
+                    pts += _around(*(np.array([ax, ay]) + d * u / np.hypot(*u)))
+                L = np.hypot(bx - ax, by - ay)
+                if L:
+                    nx, ny = (by - ay) / L, (ax - bx) / L
+                    mx, my = (ax + bx) / 2, (ay + by) / 2
+                    pts += _around(mx + d * nx, my + d * ny)
+                    pts += _around(mx - d * nx, my - d * ny)
+    return sorted(set((float(x), float(y)) for x, y in pts))
+
+
+@pytest.mark.parametrize("distance", ["literal", "column"])
+def test_leaf_refine_dwithin_vs_kernels(spark, distance):
+    """dwithin on leaves, literal and per-probe: polygons (a hole, a
+    multipolygon, a concave comb, a box), a line, a multipoint and a
+    point, and polygons in grid-border cells, with probes exactly d from
+    edges and vertices and their nextafter neighbours, inside and
+    outside the world; the column holds NaN, NULL and negative
+    distances too."""
+    # near the border, the padded bboxes stay inside the world
+    for geoms, d in ((POLYS + LINES_POINTS, 0.3), (BORDER[:2], 0.04)):
+        probes = (_dwithin_probes(geoms, d) + _probes(geoms, 4)[::3]
+                  + OUTSIDE)
+        dist = d
+        if distance == "column":
+            rng = np.random.default_rng(5)
+            dist = [d if k % 2 else float(v) for k, v in
+                    enumerate(rng.uniform(0.0, 2 * d, len(probes)))]
+            for k in range(0, len(probes), 9):
+                dist[k] = float("nan")
+            for k in range(3, len(probes), 11):
+                dist[k] = None
+            for k in range(6, len(probes), 13):
+                dist[k] = -d
+        _check(spark, geoms, ("dwithin",), probes, dist=dist)
 
 
 @pytest.mark.parametrize("pred", ["coveredby", "intersects", "within"])

@@ -906,10 +906,13 @@ def test_lonlat_probe_without_geom_column(spark, bt, pred, dist, fn):
         "bid": [10, 11], "geom": [W.encode(g) for g in G]}))
     exp = {(i + 1, 10 + j) for i, j in brute(
         [("Point", np.array(p)) for p in xy], G, fn)}
-    got = {(r["id"], r["bid"]) for r in spatial_join(
-        probe, build, pred, distance=dist, left_lonlat=("lon", "lat"),
-        broadcast_threshold=bt).collect()}
+    j = spatial_join(probe, build, pred, distance=dist,
+                     left_lonlat=("lon", "lat"), broadcast_threshold=bt)
+    got = {(r["id"], r["bid"]) for r in j.collect()}
     assert exp and got == exp
+    assert j.columns == spatial_join(
+        probe, build, pred, distance=dist, left_lonlat=("lon", "lat"),
+        broadcast_threshold=0 if bt else 200_000).columns
 
 
 def _planner_layers():
@@ -940,9 +943,9 @@ def _planner_layers():
 def test_planner_tier_matches_executed_plan(spark, monkeypatch, probe_kind,
                                             layer, bt, pred):
     """The planner's tier is the one the executed plan shows (a
-    MapInPandas only on ``fused``, a lambda only on ``jvm_lambda``), each
-    faster tier it passed over carries a reason, and the pairs equal the
-    brute force."""
+    MapInPandas only on ``fused``, a lambda on no tier), each faster tier
+    it passed over carries a reason, and the pairs equal the brute
+    force."""
     import importlib
     import pandas as pd
     SPJ = importlib.import_module("sedona_db_spark.operators.spatial_join")
@@ -972,7 +975,7 @@ def test_planner_tier_matches_executed_plan(spark, monkeypatch, probe_kind,
     plan, = plans
     executed = j._jdf.queryExecution().executedPlan().toString()
     assert ("MapInPandas" in executed) == (plan.tier == "fused")
-    assert ("lambdafunction" in executed) == (plan.tier == "jvm_lambda")
+    assert "lambdafunction" not in executed
     faster = SPJ.TIERS[:SPJ.TIERS.index(plan.tier)]
     assert [t for t, _ in plan.rejected] == list(faster)
     assert all(isinstance(why, str) and why for _, why in plan.rejected)

@@ -64,21 +64,23 @@ def sections(spark, plan=simple_plan) -> list:
         "(kind 2) join their slot in a LeftOuter BroadcastHashJoin and "
         "run a lambda-free slot test in the Filter above it — "
         "arithmetically identical to the numpy kernels, no lambda, ZERO "
-        "Python operators anywhere in the plan.  Layers the leaf refine "
-        "cannot decompose, and dwithin, run the crossing-number / on-edge "
-        "/ segment-distance refine as a SQL higher-order function over "
-        "edge arrays instead.",
+        "Python operators anywhere in the plan.  dwithin takes the same "
+        "leaves, cut at the distance, with each pair's distance bounds "
+        "and the kernel's segment distance in the slot test.  A layer the "
+        "leaf refine cannot decompose (touching rings, a leaf past the "
+        "slot limits, a non-finite coordinate, a bbox past the world) "
+        "takes strategy 2.",
         plan(j2)))
 
     j2b = spatial_join(pts, polys, "intersects")
     out.append((
         "Strategy 2 — one-pass broadcast mapInPandas (WKB probe or high-vertex layer)",
-        "WKB probe columns (and layers beyond the 512-edge HOF cap): one "
+        "WKB probe columns (and layers beyond the 512-edge cap): one "
         "MapInPandas over the big side — decode + refine fused in a single "
         "numpy-vectorized pass that emits matches only — then a broadcast "
         "hash join rehydrates dimension payload columns by row index.  "
         "Measured A/B faster than extracting coordinates through "
-        "ArrowEvalPython for the HOF refine: matches-only output crosses "
+        "ArrowEvalPython for a JVM refine: matches-only output crosses "
         "the Python boundary instead of every probe row. No shuffle of "
         "the big side.",
         plan(j2b)))
