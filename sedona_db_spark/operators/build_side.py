@@ -11,7 +11,7 @@ from collections import OrderedDict
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F, types as T
 
 from sedona_db_spark import grid
 from sedona_db_spark.geometry import kernels as K
@@ -133,6 +133,24 @@ def _edge_count(g) -> int:
         return sum(max(len(l) - 1, 0) for l in g[1])
     parts = [g[1]] if g[0] == "Polygon" else g[1]
     return sum(max(len(r) - 1, 0) for rings in parts for r in rings)
+
+
+_SPARK_TYPES = {"int64": T.LongType(), "Int64": T.LongType(),
+                "int32": T.IntegerType(), "float64": T.DoubleType(),
+                "bool": T.BooleanType()}
+
+
+def _not_null(spark, pdf: pd.DataFrame) -> DataFrame:
+    """``pdf`` as a Spark table whose value columns without a NULL are
+    declared NOT NULL, so the generated refine code skips their null
+    checks (the refine's stage stays under the JIT's 8000-byte method
+    limit with up to 5 slot edges).  The int64 key columns stay
+    nullable, as ``createDataFrame`` makes them, so the join plans keep
+    their shape."""
+    return spark.createDataFrame(pdf, T.StructType([
+        T.StructField(c, _SPARK_TYPES[str(t)],
+                      str(t) in ("int64", "Int64") or bool(pdf[c].isna().any()))
+        for c, t in pdf.dtypes.items()]))
 
 
 class _BuildSide:
@@ -272,7 +290,8 @@ class _BuildSide:
         bbox and slot id per leaf and build row) and ``slots`` (each EDGE
         slot's values), or the reason the side cannot be decomposed.
         Under dwithin ``dw`` is (pad, dmin): the leaves are cut from the
-        cell rows at the pad and carry distance bounds.  Rects and points
+        cell rows at the pad and carry distance bounds, and ``near``
+        holds each EDGE slot's distance edges, one row each.  Rects and points
         are boxes: a point is the degenerate box [x,x]×[y,y], whose clamp
         distance IS the point distance and whose closed box IS coordinate
         equality (the tier takes points only where that holds: lon/lat
@@ -288,9 +307,11 @@ class _BuildSide:
                           dw or None)
         spark = self.right_i.sparkSession
         if leaves.reason is None:
-            leaves.cells = spark.createDataFrame(leaves.cell_rows)
+            leaves.cells = _not_null(spark, leaves.cell_rows)
         if leaves.slot_rows is not None:
-            leaves.slots = spark.createDataFrame(leaves.slot_rows)
+            leaves.slots = _not_null(spark, leaves.slot_rows)
+        if leaves.near_rows is not None:
+            leaves.near = _not_null(spark, leaves.near_rows)
         return leaves, leaves.nbytes()
 
     def _cell_table(self, res: int, pad: float) -> pd.DataFrame:

@@ -48,6 +48,9 @@ def _jvm_join(left: DataFrame, plan) -> DataFrame:
       (under dwithin: when d reaches the pair's upper bound), and EDGE
       leaves join a table of slots and run a small lambda-free test above
       that join, so the whole cell join stays in whole-stage codegen.
+      Under dwithin an EDGE pair the slot test leaves unmatched then
+      takes a left semi join to its near edges, one row each, which
+      keeps it when one lies within d.
 
     mark/left_semi/left_anti/left run as JVM semi/anti joins on the same
     broadcast table, the whole refine in the join condition: still zero
@@ -72,8 +75,9 @@ def _jvm_join(left: DataFrame, plan) -> DataFrame:
         # a probe-side per-row distance stays a column (NaN as NULL)
         ldist_col, distance = plan.ldist_col, plan.distance
         if ldist_col is not None:
-            d = _distance(ldist_col)
-            dexpr = f"IF(isnan({ldist_col}), NULL, {ldist_col})"
+            # computed once per probe: the refine reads it many times
+            l_cells = l_cells.withColumn("__d", _distance(ldist_col))
+            d, dexpr = F.col("__d"), "__d"
         elif np.isnan(distance):
             d, dexpr = F.lit(None).cast("double"), "CAST(NULL AS DOUBLE)"
         else:
@@ -85,6 +89,7 @@ def _jvm_join(left: DataFrame, plan) -> DataFrame:
         dy = F.greatest(y0 - plat, plat - y1, F.lit(0.0))
         box = F.sqrt(dx * dx + dy * dy) <= d
         sure = d >= F.col("__dhi")
+        near = F.expr(LR.near_test_sql(px, py, dexpr))
         closed = ((plon + d >= x0) & (x1 + d >= plon) & (plat + d >= y0)
                   & (y1 + d >= plat) & (d >= F.col("__dlo")))
     leaves = side.leaf_table(res, *_distance_bounds(predicate, plan.pad,
@@ -98,29 +103,46 @@ def _jvm_join(left: DataFrame, plan) -> DataFrame:
             grid.cell_expr_sql(px, py, leaves.fine_res))).otherwise(key)
     l_cells = l_cells.withColumn("__cell", key)
     kind = F.col("__kind")
-    # a BBOX pair takes the EDGE test without its slot
     cond = (F.when(kind == LR.BOX, box)
             .when(kind == LR.FULL, sure).otherwise(closed))
     table, full = leaves.cells, cond
     if leaves.slots is not None:
         slot = F.expr(LR.slot_test_sql(px, py, leaves.max_edges,
                                        leaves.max_toggles,
-                                       boundary=predicate != "within",
-                                       d=dexpr))
-        if dexpr is not None:
-            slot = (d >= F.col("__dhi")) | slot
-        full = F.when(kind == LR.EDGE, closed & slot).otherwise(cond)
-        table = table.join(leaves.slots, on="__slot", how="left")
+                                       boundary=predicate != "within"))
+        # under dwithin every leaf row keys a slot (the pass slot if
+        # not EDGE): the slot join is inner, its columns never NULL
+        join = "inner" if leaves.dwithin else "left"
+        table, edge = table.join(leaves.slots, on="__slot", how=join), slot
+        if leaves.dwithin:
+            slot = sure | slot
+            table = table.join(leaves.near.withColumnRenamed(
+                "__nslot", "__slot"), on="__slot", how="left")
+            edge = slot | near
+        full = F.when(kind == LR.EDGE, closed & edge).otherwise(cond)
     if how in ("inner", "left"):
         cand = l_cells.join(F.broadcast(leaves.cells),
                             on="__cell").where(cond)
         if leaves.slots is not None:
-            # the slot test filters ABOVE a left-outer slot join: on
-            # an inner join Catalyst would merge it into the cell
-            # join's condition, measured slower
-            cand = (cand.join(F.broadcast(leaves.slots), on="__slot",
-                              how="left")
-                    .where((kind != LR.EDGE) | slot))
+            cand = cand.join(F.broadcast(leaves.slots), on="__slot",
+                             how=join)
+            hit = (kind != LR.EDGE) | slot
+            if not leaves.dwithin:
+                # the slot test filters ABOVE a left-outer slot join: on
+                # an inner join Catalyst would merge it into the cell
+                # join's condition, measured slower
+                cand = cand.where(hit)
+            else:
+                # a pair that missed keys its slot's near edges, one
+                # that matched the pass row: one row out at most (the
+                # key is never NULL, or Catalyst would filter on it and
+                # so generate the slot test twice)
+                key = F.coalesce(F.when(hit, F.lit(LR.PASS))
+                                 .otherwise(F.col("__slot")), F.lit(LR.PASS))
+                cand = cand.withColumn("__slot", key).join(
+                    F.broadcast(leaves.near),
+                    (F.col("__slot") == F.col("__nslot"))
+                    & ((F.col("__nslot") == LR.PASS) | near), "left_semi")
 
     if how in ("inner", "left"):
         pairs = (cand.join(F.broadcast(right_i), on="__ridx")

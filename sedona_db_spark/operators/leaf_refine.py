@@ -54,30 +54,41 @@ leaf's rings on those sets, ``v`` is that parity.
 Under ``dwithin`` (``kernels.geom_dwithin``) the leaves are cut from the
 cell rows at the pad, the largest distance a probe carries.  A non-box
 pair holds bounds on the kernel's distance of any probe in its leaf,
-widened by m: ``lo`` (0 where the leaf meets the polygon, else the
-distance to the nearest edge's bbox) and ``hi`` (0 inside the polygon,
-else the smallest over edges of the largest corner distance: a
-segment's distance is convex).  It is dropped when ``lo`` exceeds the
-pad, FULL when ``hi`` is at most the smallest distance that can match
-(a literal distance, or 0 for a probe column), and otherwise matches
-when ``d >= hi``, or behind the kernel's bbox prefilter when ``d >= lo``
-and its slot holds: ``(d >= 0 AND inside) OR`` some slot edge within d,
-clamp then ``hypot`` as the kernel.  Its slot edges are every edge
-within pad + m that holds a probe's smallest distance somewhere in the
-leaf (``_Shape._near``).
+taken over the leaf widened by m: ``lo`` (0 where the leaf meets the
+polygon, else the distance to the nearest edge's bbox) and ``hi`` (0
+inside the polygon, else the smallest over edges of the largest corner
+distance).  A probe lies m deep inside the widened leaf, and a segment's
+distance is convex and grows at unit rate away from it, so the probe's
+distance lies within [lo + m, hi - m]: m is far wider than the rounding
+of either side.  A pair is dropped when ``lo`` exceeds the pad, FULL
+when ``hi`` is at most the smallest distance that can match (a literal
+distance, or 0 for a probe column), and otherwise matches when
+``d >= hi``, or behind the kernel's bbox prefilter when ``d >= lo`` (so
+``d >= 0``) and its slot holds (the leaf meets the polygon, and the
+probe is inside or on it), or some near edge lies within d, clamp then
+``hypot`` as the kernel.  The near edges are rows of their own table
+(``near_rows``), which the cell join reaches by a left semi join: an
+EDGE leaf may hold any number of them, as the kernel's smallest distance
+is the smallest over any set of edges that holds every probe's nearest
+one.  Its near edges are those within pad + m of the leaf that no other
+edge dominates: an edge farther from the leaf than another edge's
+largest distance to it, plus m, is nearest to no probe there.
 
 Probes outside the world (or with a NaN coordinate) clamp into the
-grid-border cells; a pair there also takes the row's bbox test (the
-kernel's prefilter under dwithin), which such a probe fails while the
-row's bbox, padded by pad + m under dwithin, lies inside the world.
+grid-border cells.  An EDGE pair takes the row's bbox test (the kernel's
+prefilter under dwithin), which such a probe fails while the row's bbox,
+padded by pad + m under dwithin, lies inside the world.  No FULL leaf
+lies in a border cell then: its side on the world's edge would hold
+boundary points of the polygon (a local edge), or under dwithin a point
+within the pad of the leaf would lie past the world.
 
-The split level is the smallest whose leaves fit ``LEAF_EDGES`` edges
-and ``LEAF_TOGGLES`` toggles; a side no level fits takes the finest with
-slots as wide as its widest leaf.  A side cannot be decomposed
-(``Leaves.reason``: the planner passes the all-JVM tier over) with a
-non-finite coordinate, a bbox past the world, touching rings (two rings
-within 2m of each other in a finest leaf), or a finest leaf past
-``_WIDE_EDGES`` edges or ``_WIDE_TOGGLES`` toggles.
+The split level is the smallest whose leaves fit ``LEAF_EDGES`` local
+edges and ``LEAF_TOGGLES`` toggles; a side no level fits takes the
+finest with slots as wide as its widest leaf.  A side cannot be
+decomposed (``Leaves.reason``: the planner passes the all-JVM tier
+over) with a non-finite coordinate, a bbox past the world, touching
+rings (two rings within 2m of each other in a finest leaf), or a finest
+leaf past the wide slots (``_WIDE``, ``_WIDE_DWITHIN``).
 """
 
 from __future__ import annotations
@@ -94,29 +105,33 @@ LEAF_EDGES = 2          # local edges per EDGE leaf
 LEAF_TOGGLES = 4        # right-side toggles per EDGE leaf
 MAX_LEAF_SPLIT = 4      # the finest leaf level is res + MAX_LEAF_SPLIT
 # a side no level fits in that budget takes its finest level with slots
-# up to this wide: slower, but still in the JVM and exact
-_WIDE_EDGES, _WIDE_TOGGLES = 32, 16
+# up to this wide (edges, toggles): the refine's stage then stays under
+# the JIT's 8000-byte method limit, past which the fused tier is faster.
+# On 4M lon/lat probes over a 100-polygon layer (4 cores), 5 edges took
+# 7,062 bytes and 1.1 s (fused: 9.3 s); under dwithin, whose slot columns
+# are never NULL, 7 edges took 6,613 bytes and 3.4 s (fused: 13.6 s)
+_WIDE = (5, LEAF_TOGGLES)
+_WIDE_DWITHIN = (7, LEAF_TOGGLES)
 _MAX_FINE_CELLS = 1 << 19  # refined coarse cells x 4^split
 # relative to a row's largest coordinate (at least 360): millions of
 # times the rounding error of the cell assignment and of the kernel's
 # x intercept, and far below any leaf's size
 _MARGIN = 1e-9
 
-# BBOX: a FULL pair in a grid-border cell, which matches behind the
-# row's bbox test
-BOX, FULL, EDGE, BBOX = 0, 1, 2, 3
+BOX, FULL, EDGE = 0, 1, 2
 # the leaf table's columns the cell join reads, and under dwithin the
 # distance bounds
 CELL_COLS = ("__cell", "__ridx", "__kind", "__x0", "__y0", "__x1", "__y1",
              "__slot")
 DIST_COLS = ("__dlo", "__dhi")
 _EDGE_COLS = ("ax", "ay", "by", "dx", "dy", "mnx", "mxx", "mny", "mxy", "tol")
-# an unused edge slot never toggles (ay = by) and holds no probe; under
-# dwithin (two more columns, ``ll`` and ``z``) it lies at infinity
+# an unused edge slot never toggles (ay = by) and holds no probe
 _NO_EDGE = (0.0, 0.0, 0.0, 0.0, 0.0, np.inf, -np.inf, np.inf, -np.inf, 0.0)
-_NO_NEAR = (np.inf,) + _NO_EDGE[1:] + (1.0, np.inf)
-# sample grids (per side) that pick a dwithin leaf's near edges
-_SAMPLES = (8, 32, 128)
+# the near table: a slot id and one distance edge (``near_test_sql``)
+NEAR_COLS = ("__nslot", "__nax", "__nay", "__ndx", "__ndy", "__nll")
+# the pass slot (under dwithin) and near row: the rows that need no slot
+# test, and the candidates that matched already, key them
+PASS = -1
 
 
 def _seg_dist(px, py, e: np.ndarray) -> np.ndarray:
@@ -334,24 +349,23 @@ class _Shape:
         return (bool(np.logical_xor.reduce(parity[rings])), f.get(0, False),
                 f.get(1, False))
 
-    def sort(self, X0, Y0, X1, Y1, dw: tuple | None, budget: tuple,
-             slots: bool = True) -> dict:
+    def sort(self, X0, Y0, X1, Y1, dw: tuple | None, budget: tuple) -> dict:
         """Classify the leaves [X0, X1] x [Y0, Y1]: ``kind`` (FULL, EDGE,
         or -1 for dropped), ``ok`` and ``refine`` (a coarse cell to split)
         per leaf, for slots of at most ``budget`` (edges, toggles).  Under
         dwithin (``dw`` = (pad, dmin): the largest distance and the
-        smallest that can match) also the bounds ``lo`` and ``hi`` and,
-        with ``slots``, each EDGE leaf's slot ``edges``."""
+        smallest that can match) also the bounds ``lo`` and ``hi``, ``pip``
+        (the leaf's kind under the polygon test) and ``near`` (leaves x
+        ``dist`` edges: which are near)."""
         c = self.classify(X0, Y0, X1, Y1, budget)
         if dw is None:
             return c
         pad, dmin = dw
         m, e, n = self.margin, self.dist, len(X0)
-        box = np.c_[X0 - m, Y0 - m, X1 + m, Y1 + m]
-        x0, y0, x1, y1 = (box[:, i:i + 1] for i in range(4))
+        x0, y0 = (X0 - m)[:, None], (Y0 - m)[:, None]
+        x1, y1 = (X1 + m)[:, None], (Y1 + m)[:, None]
         # per leaf and edge, a lower bound of their distance (the edge's
-        # bbox's), and the largest distance of a leaf point (at a
-        # corner: a segment's distance is convex)
+        # bbox's), and an upper bound (the largest at a corner)
         near = np.hypot(
             np.maximum(np.maximum(np.minimum(e[:, 0], e[:, 2]) - x1,
                                   x0 - np.maximum(e[:, 0], e[:, 2])), 0.0),
@@ -359,123 +373,87 @@ class _Shape:
                                   y0 - np.maximum(e[:, 1], e[:, 3])), 0.0))
         far = np.maximum.reduce([_seg_dist(cx, cy, e) for cx in (x0, x1)
                                  for cy in (y0, y1)])
-        lo = np.maximum(near.min(axis=1, initial=np.inf) - m, 0.0)
-        hi = far.min(axis=1, initial=np.inf) + m
+        lo = near.min(axis=1, initial=np.inf)
+        hi = far.min(axis=1, initial=np.inf)
+        # the near edges: an edge farther from the leaf than another
+        # edge's largest distance is nearest to no probe there
+        c["near"] = (near <= pad + m) & (near <= hi[:, None] + m)
         pip = c["kind"] if self.areal else np.full(n, -1)
         lo[pip >= 0] = 0.0          # the leaf meets the polygon
         hi[pip == FULL] = 0.0       # it lies inside
         kind = np.where(lo > pad, -1, np.where(hi <= dmin, FULL, EDGE))
         ok = c["ok"] if self.areal else np.ones(n, dtype=bool)
-        c.update(kind=kind, lo=lo, hi=hi, pip=pip, edges={})
-        if slots and ok.all():
-            c["edges"] = self._near(c, box, near <= pad + m, pad, budget[0])
-            if c["edges"] is None:
-                ok = np.zeros(n, dtype=bool)
-        c.update(ok=ok, refine=(kind == EDGE) | ~ok)
+        c.update(kind=kind, lo=lo, hi=hi, pip=pip, ok=ok,
+                 refine=(kind == EDGE) | ~ok)
         return c
 
-    def _near(self, c: dict, box, cand, pad: float, max_edges: int):
-        """Each EDGE leaf's slot edges as {leaf: (dist positions, local
-        ones)}, or None if a leaf needs more than ``max_edges``: its local
-        edges and each edge near it (``cand``) that can hold a probe's
-        smallest distance there.  On a grid of sample boxes (r their
-        half-diagonal, so a sample bounds its box within 2r) an edge is
-        left out where its distance exceeds the nearest one's by more
-        than 2r + m, where every distance exceeds the pad, and inside
-        the polygon."""
-        m, out = self.margin, {}
-        todo = np.flatnonzero(c["kind"] == EDGE).tolist()
-        local = {j: [self.offset[r] + k for r in self.rings_of(c, j)
-                     for k in np.flatnonzero(c["local"][r][j]).tolist()]
-                 if c["pip"][j] == EDGE else [] for j in todo}
-        for k in (0,) + _SAMPLES:       # 0: every near edge, no samples
-            g = (np.arange(k) + 0.5) / max(k, 1)
-            gx, gy = (a.ravel() for a in np.meshgrid(g, g))
-            left, step = [], (1 << 20) // max(1, k * k * len(self.dist))
-            for at in range(0, len(todo), max(step, 1)):
-                J = np.array(todo[at:at + max(step, 1)])
-                U = np.flatnonzero(cand[J].any(axis=0))
-                need = cand[J][:, U]
-                if k:
-                    x0, y0, x1, y1 = (box[J, i:i + 1] for i in range(4))
-                    sx, sy = x0 + gx * (x1 - x0), y0 + gy * (y1 - y0)
-                    r = 0.5 * np.hypot(x1 - x0, y1 - y0) / k
-                    D = np.where(need[:, None], _seg_dist(
-                        sx[..., None], sy[..., None], self.dist[U]), np.inf)
-                    env = D.min(axis=2)
-                    rel = env - r <= pad + m
-                    deep = (c["pip"][J] == EDGE)[:, None] & (env > r + m)
-                    if deep.any():
-                        rel &= ~(deep & K.points_in_geom(
-                            sx.ravel(), sy.ravel(), self.g).reshape(sx.shape))
-                    with np.errstate(invalid="ignore"):
-                        need = ((D - env[..., None] <= 2 * r[..., None] + m)
-                                & rel[..., None]).any(axis=1)
-                for i, j in enumerate(J.tolist()):
-                    keep = sorted(set(local[j]) | set(U[need[i]].tolist()))
-                    if len(keep) <= max_edges:
-                        out[j] = (keep, local[j])
-                    else:
-                        left.append(j)
-            todo = left
-        return None if todo else out
-
     def slot(self, c: dict, leaf: int) -> tuple:
-        """An EDGE leaf's slot: its constant parity bit, truth table, edges
-        and the vertex ys of its varying toggles, in pairs (an odd count
-        per ring pairs its last end with -inf, never above a probe).  The
-        edges are its local edges (ax, ay, bx, by), or under dwithin its
-        slot's distance edges (ax, ay, bx, by, local)."""
+        """An EDGE leaf's slot: its constant parity bit, truth table, local
+        edges (ax, ay, bx, by) and the vertex ys of its varying toggles, in
+        pairs (an odd count per ring pairs its last end with -inf, never
+        above a probe).  Under dwithin only a leaf that meets the polygon
+        has them, and lines hold probes by their near edges instead."""
         edges, ys = [], []
-        inside = "edges" not in c or c["pip"][leaf] == EDGE
+        dwithin = "near" in c
+        inside = not dwithin or c["pip"][leaf] == EDGE
         for r in (self.rings_of(c, leaf) if inside else []):
             e = self.rings[r]
             edges.extend(e[c["local"][r][leaf]].tolist())
             v = e[c["var"][r][leaf], 1].tolist()
             ys += v + [-np.inf] * (len(v) % 2)
-        if "edges" in c:
-            sel, local = c["edges"][leaf]
-            edges = [(*self.dist[i].tolist(), i in local, self.vertex[i])
-                     for i in sel]
-        else:
-            for e, loc in zip(self.paths, c["path_local"]):
-                edges.extend(e[loc[leaf]].tolist())
+        for e, loc in zip(self.paths, [] if dwithin else c["path_local"]):
+            edges.extend(e[loc[leaf]].tolist())
         return (bool(c["p"][leaf]) and inside, bool(c["t0"][leaf]) and inside,
                 bool(c["t1"][leaf]) and inside, edges, ys)
 
 
-def _edge_slot(ax, ay, bx, by, local=True, vertex=None) -> tuple:
-    """One slot edge's values, in the kernel's arithmetic.  Under dwithin
-    (``vertex`` not None) an edge that is not local never crosses nor
-    holds a probe (ay = by, an empty bbox), and two values follow:
-    ``ll``, its squared length (1 for a zero-length edge: the clamped
-    projection is then 0, so its distance is the point distance), and
-    ``z``, 0 if its start's point distance counts too, else inf."""
+def _edge_values(E: np.ndarray, n: np.ndarray) -> list:
+    """The slot columns of the edges ``E`` (slots x width x (ax, ay, bx,
+    by)), the first ``n`` of each slot in use, in the kernel's
+    arithmetic."""
+    ax, ay, bx, by = np.moveaxis(E, -1, 0)
     dx, dy = bx - ax, by - ay + 0.0
-    vals = (ax, ay, by, dx, dy, min(ax, bx), max(ax, bx), min(ay, by),
-            max(ay, by), 1e-12 * max(1.0, abs(dx) + abs(by - ay)))
-    if vertex is None:
-        return vals
-    if not local:
-        vals = vals[:2] + (ay,) + vals[3:5] + _NO_EDGE[5:]
-    return vals + ((dx * dx + dy * dy) or 1.0, 0.0 if vertex else np.inf)
+    vals = [ax, ay, by, dx, dy, np.minimum(ax, bx), np.maximum(ax, bx),
+            np.minimum(ay, by), np.maximum(ay, by),
+            1e-12 * np.maximum(1.0, np.abs(dx) + np.abs(by - ay))]
+    used = np.arange(E.shape[1]) < n[:, None]
+    return [np.where(used, v, u) for v, u in zip(vals, _NO_EDGE)]
+
+
+def _near_values(slot: np.ndarray, e: np.ndarray, vertex: np.ndarray) -> dict:
+    """The near table's columns for the distance edges ``e`` (ax, ay, bx,
+    by) of the slots ``slot``, in the kernel's arithmetic
+    (``kernels.points_seg_dist``): ``ll`` is 1 for a zero-length edge, so
+    its clamped projection is 0 and its distance the point distance.  An
+    edge that folded a zero-length edge at its start (``vertex``) adds
+    that point as one more row, as the kernel takes its distance too.
+    The pass row comes first."""
+    e = np.r_[e, np.c_[e[vertex, :2], e[vertex, :2]]]
+    slot = np.r_[slot, slot[vertex]]
+    dx, dy = e[:, 2] - e[:, 0], e[:, 3] - e[:, 1]
+    ll = dx * dx + dy * dy
+    cols = (slot, e[:, 0], e[:, 1], dx, dy, np.where(ll > 0, ll, 1.0))
+    first = (PASS, 0.0, 0.0, 0.0, 0.0, 1.0)
+    return {c: np.r_[np.array([f], dtype=v.dtype), v]
+            for c, f, v in zip(NEAR_COLS, first, cols)}
 
 
 class Leaves:
     """A build side's leaf tables at one coarse resolution, or the reason
     the side cannot be decomposed (``reason`` not None).  ``cell_rows``
     holds one row per kept (leaf, build row); ``slot_rows`` one row per
-    EDGE slot.  ``cells`` and ``slots`` are the Spark tables the caller
-    makes from them.  ``dwithin`` says whether they carry the distance
-    bounds and slots."""
+    EDGE slot; under dwithin ``near_rows`` one row per near edge of an
+    EDGE slot.  ``cells``, ``slots`` and ``near`` are the Spark tables
+    the caller makes from them.  ``dwithin`` says whether they carry the
+    distance bounds and near edges."""
 
     def __init__(self, res: int, reason: str | None = None,
                  dwithin: bool = False):
         self.res, self.reason, self.dwithin = res, reason, dwithin
         self.split = 0
         self.refined: list = []
-        self.cell_rows = self.slot_rows = None
-        self.cells = self.slots = None
+        self.cell_rows = self.slot_rows = self.near_rows = None
+        self.cells = self.slots = self.near = None
         self.counts = {"box": 0, "full": 0, "edge": 0}
         self.max_edges = self.max_toggles = 0
 
@@ -485,15 +463,8 @@ class Leaves:
 
     def nbytes(self) -> int:
         return sum(int(f.memory_usage(index=False).sum())
-                   for f in (self.cell_rows, self.slot_rows) if f is not None)
-
-
-def _on_border(cells: np.ndarray) -> np.ndarray:
-    """Whether each cell lies on the grid border of its own level."""
-    n = (1 << (cells >> grid._RES_SHIFT)) - 1
-    ix = (cells >> grid._X_SHIFT) & ((1 << 29) - 1)
-    iy = cells & ((1 << 29) - 1)
-    return (ix == 0) | (ix == n) | (iy == 0) | (iy == n)
+                   for f in (self.cell_rows, self.slot_rows, self.near_rows)
+                   if f is not None)
 
 
 def _boxes(ix, iy, res):
@@ -533,7 +504,7 @@ def build(cells: pd.DataFrame, geoms: list, boxes: set, res: int,
         ix = (cs >> grid._X_SHIFT) & ((1 << 29) - 1)
         iy = cs & ((1 << 29) - 1)
         c = coarse[pos] = shape.sort(*_boxes(ix, iy, res), dw,
-                                     (LEAF_EDGES, LEAF_TOGGLES), slots=False)
+                                     (LEAF_EDGES, LEAF_TOGGLES))
         refined.update(cs[c["refine"]].tolist())
     out = Leaves(res, dwithin=dw is not None)
     out.refined = sorted(refined)
@@ -545,14 +516,15 @@ def build(cells: pd.DataFrame, geoms: list, boxes: set, res: int,
     # the smallest split whose leaves fit the slot budget, else the
     # finest with wide slots
     tries = [(s, (LEAF_EDGES, LEAF_TOGGLES)) for s in splits]
-    tries += [(s, (_WIDE_EDGES, _WIDE_TOGGLES)) for s in splits[-1:]]
+    wide = _WIDE if dw is None else _WIDE_DWITHIN
+    tries += [(s, wide) for s in splits[-1:]]
     for split, budget in tries:
         fine = _split(rows, shapes, boxes, refined, res, split, dw, budget)
         if fine is not None:
             out.split = split
             return _assemble(out, rows, shapes, coarse, fine, boxes)
-    return Leaves(res, f"a leaf needs more than {_WIDE_EDGES} edges or "
-                       f"{_WIDE_TOGGLES} toggles, or holds touching rings, "
+    return Leaves(res, f"a leaf needs more than {wide[0]} local edges or "
+                       f"{wide[1]} toggles, or holds touching rings, "
                        f"at res {res + (splits or [0])[-1]}")
 
 
@@ -594,74 +566,82 @@ def _split(rows, shapes, boxes, refined, res, split, dw, budget):
 
 def _assemble(out: Leaves, rows, shapes, coarse, fine, boxes) -> Leaves:
     """The leaf rows (each kept (leaf, build row) with its kind, bbox and,
-    for an EDGE row, its slot id; under dwithin its distance bounds) and
-    the slot rows."""
-    refined = set(out.refined)
-    recs, slots = [], []
+    for an EDGE row, its slot id; under dwithin its distance bounds), the
+    slot rows and under dwithin the near rows."""
+    refined = np.asarray(out.refined, dtype=np.int64)
+    parts, slots, near = [], [], []
     for pos, ridx, bbox, cs in rows:
-        keep = np.array([c not in refined for c in cs.tolist()], dtype=bool)
-        parts = [(cs, coarse.get(pos), keep)]
+        mine = [(cs, coarse.get(pos), ~np.isin(cs, refined))]
         if pos in fine:
             ids, c = fine[pos]
-            parts.append((ids, c, np.ones(len(ids), dtype=bool)))
-        for ids, c, keep in parts:
-            for j in np.flatnonzero(keep):
-                kind, bounds = BOX, (0.0, 0.0)
-                if c is not None:
-                    kind = int(c["kind"][j])
-                    if out.dwithin:
-                        bounds = (float(c["lo"][j]), float(c["hi"][j]))
-                slot = None
-                if kind == EDGE:        # only fine leaves have edges
-                    slot = len(slots)
-                    slots.append(shapes[pos].slot(c, j))
-                elif kind == FULL and _on_border(ids[j:j + 1])[0]:
-                    # behind the bbox test (under dwithin d >= hi too)
-                    kind, bounds = BBOX, (bounds[1], bounds[1])
-                if kind >= 0:
-                    recs.append((int(ids[j]), ridx, kind, *bbox, slot)
-                                + (bounds if out.dwithin else ()))
+            mine.append((ids, c, np.ones(len(ids), dtype=bool)))
+        for ids, c, keep in mine:
+            kind = np.full(len(ids), BOX) if c is None else c["kind"]
+            j = np.flatnonzero(keep & (kind >= 0))
+            lohi = ((c["lo"][j], c["hi"][j]) if c is not None and out.dwithin
+                    else (np.zeros(len(j)),) * 2)
+            slot = np.full(len(j), -1)
+            edge = kind[j] == EDGE      # only fine leaves have edges
+            slot[edge] = len(slots) + np.arange(edge.sum())
+            slots += [shapes[pos].slot(c, i) for i in j[edge].tolist()]
+            if out.dwithin and edge.any():
+                at, k = np.nonzero(c["near"][j[edge]])
+                near.append((slot[edge][at], shapes[pos].dist[k],
+                             shapes[pos].vertex[k]))
+            parts.append((ids[j], np.full(len(j), ridx), kind[j],
+                          *(np.full(len(j), v) for v in bbox), slot, *lohi))
     cols = list(CELL_COLS) + (list(DIST_COLS) if out.dwithin else [])
-    out.cell_rows = pd.DataFrame(recs, columns=cols).astype(
+    data = [np.concatenate([p[k] for p in parts]) if parts else np.zeros(0)
+            for k in range(len(cols))]
+    out.cell_rows = pd.DataFrame(dict(zip(cols, data))).astype(
         {"__cell": "int64", "__ridx": "int64", "__kind": "int32",
-         "__slot": "Int64",
          **{c: "float64" for c in cols[3:7] + cols[len(CELL_COLS):]}})
-    out.max_edges = max((len(s[3]) for s in slots), default=0)
+    slot = data[len(CELL_COLS) - 1].astype(np.int64)
+    if out.dwithin and slots:
+        # every row keys a slot, the pass slot if it is not EDGE: the
+        # slot join is then an inner join, and its columns are not NULL
+        slots.append((False, False, False, [], []))
+    else:
+        out.cell_rows["__slot"] = pd.arrays.IntegerArray(slot, slot < 0)
+    out.max_edges = width = max((len(s[3]) for s in slots), default=0)
     out.max_toggles = max((len(s[4]) // 2 for s in slots), default=0)
-    edge_cols = _EDGE_COLS + (("ll", "z") if out.dwithin else ())
-    srows = []
-    for i, (p, t0, t1, edges, ys) in enumerate(slots):
-        vals = [i, p, t0, t1]
-        for k in range(out.max_edges):
-            vals += (_edge_slot(*edges[k]) if k < len(edges)
-                     else _NO_NEAR if out.dwithin else _NO_EDGE)
-        # unused toggle pairs are (0, 0)
-        vals += ys + [0.0] * (2 * out.max_toggles - len(ys))
-        srows.append(vals)
-    if srows:
-        out.slot_rows = pd.DataFrame(srows, columns=(
-            ["__slot", "__lp", "__t0", "__t1"]
-            + [f"__{c}{k}" for k in range(out.max_edges) for c in edge_cols]
-            + [f"__{e}{t}" for t in range(out.max_toggles)
-               for e in ("ta", "tb")]))
+    if slots:
+        # (ax, ay, bx, by); unused toggle pairs are (0, 0)
+        E = np.zeros((len(slots), width, 4))
+        ys = np.zeros((len(slots), 2 * out.max_toggles))
+        for i, (_, _, _, edges, y) in enumerate(slots):
+            if edges:
+                E[i, :len(edges)] = edges
+            ys[i, :len(y)] = y
+        data = {"__slot": np.r_[np.arange(len(slots) - out.dwithin),
+                                [PASS] * out.dwithin].astype(np.int64),
+                **{c: np.array([s[k] for s in slots], dtype=bool)
+                   for k, c in enumerate(("__lp", "__t0", "__t1"))}}
+        vals = _edge_values(E, np.array([len(s[3]) for s in slots]))
+        for k in range(width):
+            data.update((f"__{c}{k}", v[:, k]) for c, v in zip(_EDGE_COLS, vals))
+        for t in range(out.max_toggles):
+            data[f"__ta{t}"], data[f"__tb{t}"] = ys[:, 2 * t], ys[:, 2 * t + 1]
+        out.slot_rows = pd.DataFrame(data)
+    if near:
+        out.near_rows = pd.DataFrame(_near_values(
+            *(np.concatenate(a) for a in zip(*near))))
     kinds = out.cell_rows["__kind"]
     out.counts = {"box": int((kinds == BOX).sum()),
-                  "full": int(kinds.isin((FULL, BBOX)).sum()),
+                  "full": int((kinds == FULL).sum()),
                   "edge": int((kinds == EDGE).sum())}
     return out
 
 
 def slot_test_sql(px: str, py: str, n_edges: int, n_toggles: int,
-                  boundary: bool, d: str | None = None) -> str:
+                  boundary: bool) -> str:
     """The EDGE slot test over the slot columns, lambda-free:
     ``on OR T[v]`` for boundary-inclusive predicates, ``NOT on AND T[v]``
     for ``within``; ``v`` is the constant bit XOR each local edge's
-    crossing toggle (the kernel's arithmetic) XOR each right-side toggle.
-    Under dwithin (``d`` the distance's SQL) ``(d >= 0 AND (on OR T[v]))
-    OR`` some slot edge's distance ``<= d``, clamp then ``hypot`` as in
-    ``kernels.points_seg_dist``."""
+    crossing toggle (the kernel's arithmetic) XOR each right-side
+    toggle."""
     flips = ["__lp"]
-    on, near = [], []
+    on = []
     for k in range(n_edges):
         ax, ay, by, dx, dy, mnx, mxx, mny, mxy, tol = (
             f"__{c}{k}" for c in _EDGE_COLS)
@@ -670,11 +650,6 @@ def slot_test_sql(px: str, py: str, n_edges: int, n_toggles: int,
         on.append(f"({px} >= {mnx} AND {px} <= {mxx} AND {py} >= {mny} AND "
                   f"{py} <= {mxy} AND abs({dx} * ({py} - {ay}) - "
                   f"{dy} * ({px} - {ax})) < {tol})")
-        t = (f"least(greatest((({px} - {ax}) * {dx} + ({py} - {ay}) * {dy})"
-             f" / __ll{k}, 0.0D), 1.0D)")
-        near.append(f"hypot({px} - ({ax} + {t} * {dx}), "
-                    f"{py} - ({ay} + {t} * {dy})) <= {d} OR "
-                    f"hypot({px} - {ax}, {py} - {ay}) + __z{k} <= {d}")
     for t in range(n_toggles):
         flips.append(f"((__ta{t} > {py}) != (__tb{t} > {py}))")
     v = flips[0]
@@ -682,9 +657,15 @@ def slot_test_sql(px: str, py: str, n_edges: int, n_toggles: int,
         v = f"(({v}) != ({f}))"
     t = f"IF({v}, __t1, __t0)"
     on_sql = " OR ".join(on) if on else "false"
-    if d is not None:
-        return " OR ".join([f"(({d}) >= 0.0D AND (({on_sql}) OR {t}))"]
-                           + near)
     if boundary:
         return f"(({on_sql}) OR {t})"
     return f"(NOT ({on_sql}) AND {t})"
+
+
+def near_test_sql(px: str, py: str, d: str) -> str:
+    """Whether a near row's edge lies within ``d`` (SQL) of the probe:
+    clamp then ``hypot``, as ``kernels.points_seg_dist``."""
+    t = (f"least(greatest((({px} - __nax) * __ndx + ({py} - __nay) * __ndy)"
+         f" / __nll, 0.0D), 1.0D)")
+    return (f"hypot({px} - (__nax + {t} * __ndx), "
+            f"{py} - (__nay + {t} * __ndy)) <= {d}")

@@ -12,7 +12,7 @@ over.  The tiers, fastest first:
   and polygons of at most 512 edges (WKB point probes against all-rect
   layers), under intersects, coveredby, within and dwithin.  Every
   non-box row takes the lambda-free leaf refine (``leaf_refine``); a
-  side it cannot decompose (touching rings, a leaf over the slot limits,
+  side it cannot decompose (touching rings, a leaf past the wide slots,
   a non-finite coordinate, a bbox past the world) takes the next tier.
 - ``fused`` (``fused_join``): one mapInPandas pass over the probe side
   against a broadcast cell index of the collected build side, refined

@@ -13,6 +13,7 @@ fused tier and must match too.
 """
 
 import importlib
+import re
 
 import numpy as np
 import pandas as pd
@@ -21,7 +22,7 @@ import pytest
 from sedona_db_spark.geometry import kernels as K
 from sedona_db_spark.geometry import wkb as W
 from sedona_db_spark.operators import spatial_join
-from sedona_db_spark.sources.fixtures import regions_grid
+from sedona_db_spark.sources.fixtures import random_polygons, regions_grid
 
 SJ = importlib.import_module("sedona_db_spark.operators.memo")
 LR = importlib.import_module("sedona_db_spark.operators.leaf_refine")
@@ -313,3 +314,41 @@ def test_world_layer_plan_is_codegen_without_lambdas(spark, pred):
             if "BroadcastHashJoin [__slot" in ln]
     assert len(slot) == 1 and "LeftOuter" in lines[slot[0]]
     assert "Filter" in lines[slot[0] - 1] and "__lp" in lines[slot[0] - 1]
+
+
+@pytest.mark.parametrize("distance", [None, 0.75, "pdist"])
+def test_wide_slots_fit_the_jit(spark, distance):
+    """The 100-polygon random layer (holes, 3-10 vertices) fits no 2-edge
+    leaf level under intersects or a 0-2 probe distance, so it takes the
+    wide slots.  The slot join stays in whole-stage codegen and every
+    generated method of the join's stage under HotSpot's 8000-byte
+    limit, past which the JIT leaves it interpreted and the fused tier
+    is faster."""
+    from pyspark.sql import functions as F
+    layer = spark.createDataFrame(random_polygons(
+        100, seed=43, num_vertices=(3, 10), hole_rate=0.5))
+    probes = spark.range(1000).select(
+        F.col("id").alias("pid"), (F.rand(1) * 22 - 11).alias("lon"),
+        (F.rand(2) * 22 - 11).alias("lat"), (F.rand(3) * 2).alias("pdist"))
+    pred, kw = "dwithin", {"distance": distance}
+    if distance is None:
+        pred, kw = "intersects", {}
+    elif distance == "pdist":
+        kw["distance_side"] = "probe"
+    j = spatial_join(probes, layer, pred, left_lonlat=("lon", "lat"),
+                     right_geom="geometry", **kw).groupBy("id").count()
+    j.collect()
+    side = next(reversed(SJ._BUILD_SIDES.values()))[1]
+    lv = [v for k, (v, _) in side.derived.items() if k[0] == "leaves"][-1]
+    assert lv.reason is None
+    assert (lv.max_edges > LR.LEAF_EDGES) == (distance != 0.75)
+    # the slot join and its test run in whole-stage codegen
+    plan = j._jdf.queryExecution().executedPlan().toString()
+    slot = [ln for ln in plan.split("== Initial Plan ==")[0].splitlines()
+            if "BroadcastHashJoin [__slot" in ln]
+    assert slot and all(ln.lstrip(" :+-").startswith("*(") for ln in slot)
+    code = j.sparkSession._jvm.PythonSQLUtils.explainString(
+        j._jdf.queryExecution(), "codegen")
+    assert "MapInPandas" not in code and "lambdafunction" not in code
+    sizes = [int(v) for v in re.findall(r"maxMethodCodeSize:(\d+)", code)]
+    assert sizes and max(sizes) < 8000, sizes

@@ -65,8 +65,10 @@ def sections(spark, plan=simple_plan) -> list:
         "run a lambda-free slot test in the Filter above it — "
         "arithmetically identical to the numpy kernels, no lambda, ZERO "
         "Python operators anywhere in the plan.  dwithin takes the same "
-        "leaves, cut at the distance, with each pair's distance bounds "
-        "and the kernel's segment distance in the slot test.  A layer the "
+        "leaves, cut at the distance, with each pair's distance bounds; "
+        "a boundary leaf's near edges are rows of a third table that a "
+        "LeftSemi BroadcastHashJoin tests in the kernel's segment "
+        "distance, so they add no slot width.  A layer the "
         "leaf refine cannot decompose (touching rings, a leaf past the "
         "slot limits, a non-finite coordinate, a bbox past the world) "
         "takes strategy 2.",
